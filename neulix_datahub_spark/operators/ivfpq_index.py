@@ -17,29 +17,27 @@ unit), just not equal to retraining from scratch. Recall drift under
 distribution shift is the operational trigger for a rebuild, exactly
 as with any ANN index.
 
-Layout under ``path``:
+Families (``sources/fragstore.py`` owns the layout, the tombstone
+ledger and the commit):
 
-- ``_IVFPQ_META.json`` — frozen parameters + the coarse centroids and
-  both PQ codebooks (k·d + 2·k·(d/2) floats — a few KB; JSON doubles
-  round-trip exactly, so encode-at-ingest is bit-identical to
-  encode-at-build).
-- ``codes_v<n>/coarse=<c>/…`` — ``(id, vec, c0, c1)`` partitioned by
-  coarse cell: a probe's ``coarse IN (...)`` filter is a partition
-  filter, so non-probed cell DIRECTORIES are never read (the
-  build_ivf_index layout, carried over). ``codes_version`` in the
-  sidecar points at the live generation; compaction writes the next
-  generation and flips the pointer (the dedup-index discipline).
+- ``codes`` — ``(id, vec, c0, c1)`` partitioned by ``coarse`` cell: a
+  probe's ``coarse IN (...)`` filter is a partition filter, so
+  non-probed cell DIRECTORIES are never read (the build_ivf_index
+  layout, carried over). Each ingest appends one fragment; compaction
+  and rebuild rewrite the family as a new generation.
+- ``tombs`` — deleted ids, anti-joined by every query path.
+
+The sidecar (``_IVFPQ_META.json``) carries the frozen parameters plus
+the coarse centroids and both PQ codebooks (k·d + 2·k·(d/2) floats — a
+few KB; JSON doubles round-trip exactly, so encode-at-ingest is
+bit-identical to encode-at-build) and ``n_vecs``.
 
 Scale: build is 3 deterministic Lloyd runs (driver holds centroids
 only) + one narrow encode projection + one partitioned write; ingest
 touches only the delta (encode is a literal-centroid expression) plus
 one id-column scan of the index for the idempotence anti-join; query
 reads only probed directories and ranks the fixed k² cell table
-driver-side. Ingest commits by append INTO the live generation (the
-``append_to_ivf_index`` simplification — codes are idempotent by id,
-so the anti-join makes redelivery a no-op even after a partial
-append); compaction, which REWRITES rows and therefore cannot lean on
-idempotence, commits by generation pointer flip.
+driver-side.
 
 Reference parity: not in the reference (no vector data there); this is
 the L3 training-data-pipeline tier, persisted form.
@@ -47,9 +45,7 @@ the L3 training-data-pipeline tier, persisted form.
 
 from __future__ import annotations
 
-import json
 import math
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -66,6 +62,12 @@ from neulix_datahub_spark.operators.similarity import (
     const_double_array,
     const_double_matrix,
 )
+from neulix_datahub_spark.sources.fragstore import (
+    IndexStore,
+    create_index,
+    files_per_partition,
+    open_index,
+)
 
 __all__ = [
     "build_ivfpq_index",
@@ -79,20 +81,13 @@ __all__ = [
     "read_ivfpq_meta",
 ]
 
-_IVFPQ_META = "_IVFPQ_META.json"
+
+def _store(path: str) -> IndexStore:
+    return open_index(path, "ivfpq")
 
 
 def read_ivfpq_meta(path: str) -> dict:
-    with open(os.path.join(path, _IVFPQ_META), encoding="utf-8") as f:
-        return json.load(f)
-
-
-def _write_meta(path: str, meta: dict) -> None:
-    # write-then-rename: the repo-wide posix pointer discipline
-    tmp = os.path.join(path, _IVFPQ_META + ".tmp")
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump(meta, f, sort_keys=True)
-    os.replace(tmp, os.path.join(path, _IVFPQ_META))
+    return _store(path).view()
 
 
 def _residual(vec, coarse, coarse_centroids: list[list[float]]):
@@ -171,10 +166,6 @@ def _encode(df: DataFrame, meta: dict) -> DataFrame:
     )
 
 
-def _codes_dir(path: str, meta: dict) -> str:
-    return os.path.join(path, f"codes_v{meta.get('codes_version', 0)}")
-
-
 def build_ivfpq_index(
     df: DataFrame,
     path: str,
@@ -199,29 +190,11 @@ def build_ivfpq_index(
     meta = _train_meta(
         df, coarse_k, coarse_iters, pq_k, pq_iters, vec_col, id_col, encode
     )
-    meta["codes_version"] = 0
-    meta["n_vecs"] = _write_codes_counted(_encode(df, meta), path, meta)
-    _write_meta(path, meta)
-    return meta
-
-
-def _write_codes_counted(codes: DataFrame, path: str, meta: dict) -> int:
-    """Overwrite-write a codes generation and return its row count from
-    an :class:`~pyspark.sql.Observation` riding the write job itself —
-    the count of what THIS write produced, without the full re-read of
-    the freshly written directory the count-it-back form paid (one
-    saved index scan per build/rebuild/compact; ingest keeps its
-    recount because its directory holds rows from PRIOR appends too)."""
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    (
-        codes.observe(obs, F.count(F.lit(1)).alias("n"))
-        .write.mode("overwrite")
-        .partitionBy("coarse")
-        .parquet(_codes_dir(path, meta))
-    )
-    return int(obs.get["n"])
+    with create_index(path, "ivfpq", meta) as txn:
+        n_vecs = txn.append(
+            "codes", _encode(df, meta), partition_by="coarse", count=True
+        )
+        return txn.commit(n_vecs=n_vecs).view()
 
 
 def _train_meta(
@@ -235,10 +208,9 @@ def _train_meta(
     encode: str,
 ) -> dict:
     """Train the coarse quantizer + both PQ codebooks and return the
-    sidecar dict WITHOUT a codes_version — the training block shared by
-    :func:`build_ivfpq_index` (generation 0) and
-    :func:`rebuild_ivfpq_index` (the next generation, retrained on the
-    live corpus)."""
+    frozen parameters — the training block shared by
+    :func:`build_ivfpq_index` and :func:`rebuild_ivfpq_index` (retrained
+    on the live corpus)."""
     if encode not in ("plain", "residual"):
         raise ValueError(f"encode must be 'plain' or 'residual', got {encode!r}")
     first = df.select(F.size(vec_col).alias("d")).first()
@@ -319,155 +291,73 @@ def rebuild_ivfpq_index(
     SCALE.md §r13); rebuilding RETRAINS the coarse quantizer + PQ
     codebooks on what is actually at rest (the LIVE corpus — tombstones
     purge on the way, like compaction), re-encodes, and commits the
-    next generation by the same pointer flip. Structural parameters
-    (coarse_k, pq_k, encode, columns) stay frozen from the sidecar —
-    a rebuild answers drift, it does not silently change the index
-    design. Measured on the drift fixture: post-rebuild shortlist
-    amplification drops back to ~1× because the new centroids split
-    the drifted cluster across cells (unit-pinned as a strict
-    decrease).
+    next generation. Structural parameters (coarse_k, pq_k, encode,
+    columns) stay frozen from the sidecar — a rebuild answers drift, it
+    does not silently change the index design. Measured on the drift
+    fixture: post-rebuild shortlist amplification drops back to ~1×
+    because the new centroids split the drifted cluster across cells
+    (unit-pinned as a strict decrease).
 
     Cost: the same three Lloyd runs + encode + partitioned write as
     build, over the live corpus — the deliberate heavyweight response
     the monitor's `drift_detected` threshold gates."""
-    import shutil
-
-    old_meta = read_ivfpq_meta(path)
-    old_dir = _codes_dir(path, old_meta)
-    old_tombs = _tombs_dir(path, old_meta)
-    live = _live_codes(spark, path, old_meta).select(
-        F.col("id").alias(old_meta["id_col"]),
-        F.col("vec").alias(old_meta["vec_col"]),
+    store = _store(path)
+    old = store.meta
+    live = store.live(spark, "codes").select(
+        F.col("id").alias(old["id_col"]),
+        F.col("vec").alias(old["vec_col"]),
     ).localCheckpoint(eager=True)
-    meta = _train_meta(
+    trained = _train_meta(
         live,
-        old_meta["coarse_k"],
+        old["coarse_k"],
         coarse_iters,
-        old_meta["pq_k"],
+        old["pq_k"],
         pq_iters,
-        old_meta["vec_col"],
-        old_meta["id_col"],
-        old_meta.get("encode", "plain"),
+        old["vec_col"],
+        old["id_col"],
+        old.get("encode", "plain"),
     )
-    meta["codes_version"] = old_meta.get("codes_version", 0) + 1
-    meta["n_vecs"] = _write_codes_counted(_encode(live, meta), path, meta)
-    _write_meta(path, meta)  # the atomic commit
-    shutil.rmtree(old_dir, ignore_errors=True)
-    shutil.rmtree(old_tombs, ignore_errors=True)
-    return meta
+    with store.begin() as txn:
+        n_vecs = txn.rewrite(
+            "codes", _encode(live, trained), partition_by="coarse", count=True
+        )
+        txn.rewrite("tombs")
+        return txn.commit(n_vecs=n_vecs, **trained).view()
 
 
 def ingest_ivfpq_delta(
     spark: SparkSession, delta: DataFrame, path: str
 ) -> dict:
     """Encode never-seen delta vectors under the FROZEN codebooks and
-    append them into their coarse-cell directories. Idempotent: ids
-    already at rest are anti-joined away (the one prior-state scan is
-    the index's id column), so a redelivered batch is a no-op. The
+    append them as one fragment of coarse-cell directories. Idempotent:
+    ids already at rest are anti-joined away (the one prior-state scan
+    is the index's id column), so a redelivered batch is a no-op. The
     delta is validated up front — ids unique WITHIN the batch (an
     internal duplicate passes the anti-join twice and would break the
     idempotent-by-id invariant permanently) and every vector exactly
     ``dim`` long (a short vector would silently zip_with-truncate into
-    garbage codes). The sidecar's ``n_vecs`` is RECOUNTED from the
-    codes directory after the append (the build discipline) rather
-    than incremented, so a crash between append and sidecar write
-    self-heals on the next ingest instead of undercounting forever.
-    Returns ``{n_new, n_vecs}``."""
-    meta = read_ivfpq_meta(path)
-    id_col, vec_col = meta["id_col"], meta["vec_col"]
-    # One fused validation-and-staging pass over the delta (r13 fused
-    # the three validation jobs — unique-id aggregate, dim probe,
-    # tombstone-overlap probe — into one; r14 folds the anti-join count
-    # into the SAME pass: the delta is marked dead/known, pinned
-    # lazily, and the single aggregate below both validates and counts
-    # the new rows while materializing the pin — one delta scan total
-    # where round 12 paid four). Same checks, same error precedence,
-    # same messages.
-    staged = delta.withColumn("__sz", F.size(vec_col))
-    tombs = _tombs_dir(path, meta)
-    if os.path.isdir(tombs) and any(
-        f.endswith(".parquet") for f in os.listdir(tombs)
-    ):
-        dead = (
-            spark.read.parquet(tombs)
-            .select(F.col("id").alias(id_col), F.lit(1).alias("__dead"))
-            .distinct()
-        )
-        staged = staged.join(F.broadcast(dead), id_col, "left")
-    else:
-        staged = staged.withColumn("__dead", F.lit(None).cast("int"))
-    known = spark.read.parquet(_codes_dir(path, meta)).select(
-        F.col("id").alias("__kid"), F.lit(1).alias("__known")
-    )
-    staged = staged.join(
-        known, staged[id_col] == known["__kid"], "left"
-    ).drop("__kid").localCheckpoint(eager=False)
-    v = staged.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count_distinct(F.col(id_col)).alias("d"),
-        F.count(F.when(F.col(id_col).isNull(), 1)).alias("nulls"),
-        F.count(F.when(F.col("__sz") != F.lit(meta["dim"]), 1)).alias(
-            "bad_dim"
+    garbage codes). Returns ``{n_new, n_vecs}``."""
+    store = _store(path)
+    meta = store.meta
+    vec_col = meta["vec_col"]
+    new, n_new = store.stage_delta(
+        spark,
+        delta,
+        "codes",
+        checks=(
+            (
+                F.size(vec_col) != F.lit(meta["dim"]),
+                f"delta contains vector(s) whose size({vec_col}) != "
+                f"index dim {meta['dim']}",
+            ),
         ),
-        F.count(F.when(F.col("__dead") == 1, 1)).alias("n_dead"),
-        F.count(F.when(F.col("__known").isNull(), 1)).alias("n_new"),
-    ).first()
-    if v["nulls"]:
-        raise ValueError(
-            f"ingest_ivfpq_delta: {v['nulls']} row(s) have NULL "
-            f"{id_col!r} — ids are the index identity and must be "
-            "non-null"
-        )
-    if v["n"] != v["d"]:
-        raise ValueError(
-            f"ingest_ivfpq_delta: {v['n'] - v['d']} duplicate {id_col!r} "
-            "row(s) in the batch — deduplicate upstream (e.g. exact_dedup "
-            "or dropDuplicates) before indexing; admitting them would "
-            "corrupt the one-row-per-id labels grain"
-        )
-    if v["bad_dim"]:
-        raise ValueError(
-            f"ingest_ivfpq_delta: delta contains vector(s) whose "
-            f"size({vec_col}) != index dim {meta['dim']}"
-        )
-    if v["n_dead"]:
-        raise ValueError(
-            "ingest_ivfpq_delta: delta contains tombstoned id(s) — "
-            "deletes are final until compaction (resurrection-by-"
-            "append would strand two at-rest rows behind one "
-            "tombstone); run compact_ivfpq_index first"
-        )
-    n_new = int(v["n_new"])
+    )
     if n_new == 0:
         return {"n_new": 0, "n_vecs": meta["n_vecs"]}
-    new = staged.filter(F.col("__known").isNull()).drop(
-        "__sz", "__dead", "__known"
-    )
-    _encode(new, meta).write.mode("append").partitionBy("coarse").parquet(
-        _codes_dir(path, meta)
-    )
-    meta["n_vecs"] = spark.read.parquet(_codes_dir(path, meta)).count()
-    _write_meta(path, meta)
-    return {"n_new": n_new, "n_vecs": meta["n_vecs"]}
-
-
-def _tombs_dir(path: str, meta: dict) -> str:
-    return os.path.join(path, f"tombs_v{meta.get('codes_version', 0)}")
-
-
-def _live_codes(spark: SparkSession, path: str, meta: dict) -> DataFrame:
-    """The queryable rows: the at-rest codes minus the tombstone
-    ledger (broadcast anti-join — the ledger is bounded between
-    compactions, which purge it physically). Every query/audit path
-    reads through this, so a deleted id can never be returned."""
-    codes = spark.read.parquet(_codes_dir(path, meta))
-    tombs = _tombs_dir(path, meta)
-    if os.path.isdir(tombs) and any(
-        f.endswith(".parquet") for f in os.listdir(tombs)
-    ):
-        dead = spark.read.parquet(tombs).select("id").distinct()
-        codes = codes.join(F.broadcast(dead), "id", "left_anti")
-    return codes
+    with store.begin() as txn:
+        txn.append("codes", _encode(new, meta), partition_by="coarse")
+        store = txn.commit(n_vecs=meta["n_vecs"] + n_new)
+    return {"n_new": n_new, "n_vecs": store.meta["n_vecs"]}
 
 
 def delete_from_ivfpq_index(
@@ -476,12 +366,10 @@ def delete_from_ivfpq_index(
     """Delete vectors by id (round 13 — the lifecycle operation the
     index lacked: dedup removals and right-to-be-forgotten requests
     both need it). Deletes are TOMBSTONES, not rewrites: the ids
-    append into the generation's tombstone ledger (idempotent — the
-    ledger is distinct-read), every query path anti-joins the ledger
-    (bounded, broadcast), and :func:`compact_ivfpq_index` purges
-    tombstoned rows physically and starts the next generation with an
-    empty ledger — the same pointer-flip commit that already covers
-    the code rewrite.
+    append one tombstone fragment (idempotent — the ledger is
+    distinct-read), every query path anti-joins the ledger (bounded,
+    broadcast), and :func:`compact_ivfpq_index` purges tombstoned rows
+    physically and starts the next generation with an empty ledger.
 
     Semantics are deliberately FINAL-until-compaction: ids in the
     ledger cannot be re-ingested (``ingest_ivfpq_delta`` raises) —
@@ -491,26 +379,7 @@ def delete_from_ivfpq_index(
     accepted (deleting an absent id is a no-op at read time), so
     delete is idempotent under redelivery. Returns
     ``{n_deleted_request, n_tombstones, n_live}``."""
-    meta = read_ivfpq_meta(path)
-    id_col = meta["id_col"]
-    req = ids.select(F.col(id_col).alias("id")).distinct()
-    n_req = req.count()
-    if n_req:
-        req.write.mode("append").parquet(_tombs_dir(path, meta))
-    dead = (
-        spark.read.parquet(_tombs_dir(path, meta)).select("id").distinct()
-    )
-    n_tombs = dead.count()
-    n_live = (
-        spark.read.parquet(_codes_dir(path, meta))
-        .join(F.broadcast(dead), "id", "left_anti")
-        .count()
-    )
-    return {
-        "n_deleted_request": n_req,
-        "n_tombstones": n_tombs,
-        "n_live": n_live,
-    }
+    return _store(path).delete(spark, ids, "codes")
 
 
 def _apply_cell_cap(
@@ -570,7 +439,8 @@ def query_ivfpq_index(
     contributes up to the cap. The price is recall inside capped hot
     cells (a true neighbor can be sampled out — measured, SCALE.md);
     leave None for exhaustive funnels."""
-    meta = read_ivfpq_meta(path)
+    store = _store(path)
+    meta = store.meta
     q = [float(x) for x in query_vector]
     if len(q) != meta["dim"]:
         raise ValueError(
@@ -601,7 +471,7 @@ def query_ivfpq_index(
             "similarity is undefined for an all-zero query"
         )
     pq_k = meta["pq_k"]
-    cand = _live_codes(spark, path, meta).filter(
+    cand = store.live(spark, "codes").filter(
         F.col("coarse").isin(*probes)
     )
     if meta.get("encode", "plain") == "residual":
@@ -731,7 +601,8 @@ def audit_ivfpq_recall(
     codes relation (an audit, not a serving path — the scan is the
     point; the codes never shuffle), the approximate side is the
     normal directory-pruned batch probe."""
-    meta = read_ivfpq_meta(path)
+    store = _store(path)
+    meta = store.meta
     id_col, vec_col = meta["id_col"], meta["vec_col"]
     scored_sl = _batch_shortlist_scored(
         spark,
@@ -764,8 +635,7 @@ def audit_ivfpq_recall(
             _norm(F.col(vec_col)).alias("__pn"),
         )
     )
-    codes = _live_codes(spark, path, meta)
-    pairs = codes.join(p_side, F.lit(True))
+    pairs = store.live(spark, "codes").join(p_side, F.lit(True))
     if exclude_self:
         pairs = pairs.filter(F.col("id") != F.col("probe_id"))
     scored = pairs.select(
@@ -814,42 +684,24 @@ def compact_ivfpq_index(
     """Small-file maintenance: every ingest appends files into hot
     coarse-cell directories, so read amplification grows with ingest
     count. Compaction rewrites the codes into the NEXT generation with
-    ``files_per_cell`` right-sized files per cell and commits by
-    flipping the sidecar's ``codes_version`` pointer — a crash before
-    the flip leaves the live generation untouched (rewrites cannot
-    lean on idempotence the way appends do, hence the pointer). The
-    old generation (and its tombstone ledger) is removed after the
-    flip. Round 13: compaction also PURGES tombstoned rows — the
-    rewrite reads through :func:`_live_codes`, so the next generation
-    starts with a physically-clean relation and an empty ledger (the
-    one pointer flip commits both), after which deleted ids become
-    ingestable again. Without deletes it is a pure rewrite: the row
-    multiset is invariant (unit-pinned)."""
-    import shutil
-
-    meta = read_ivfpq_meta(path)
-    old_dir = _codes_dir(path, meta)
-    old_tombs = _tombs_dir(path, meta)
-    new_meta = dict(meta)
-    new_meta["codes_version"] = meta.get("codes_version", 0) + 1
-    # hash-salted shuffle (the compact_partitioned_parquet recipe): each
-    # (cell, salt) pair lands in one task, so every cell compacts to at
-    # most files_per_cell files while cells still rewrite in parallel —
-    # no single-task bottleneck at scale
-    new_meta["n_vecs"] = _write_codes_counted(
-        _live_codes(spark, path, meta)
-        .withColumn(
-            "__salt", F.pmod(F.xxhash64("id"), F.lit(files_per_cell))
+    ``files_per_cell`` right-sized files per cell. Round 13: compaction
+    also PURGES tombstoned rows — the rewrite reads the live codes, so
+    the next generation starts with a physically-clean relation and an
+    empty ledger (one commit covers both), after which deleted ids
+    become ingestable again. Without deletes it is a pure rewrite: the
+    row multiset is invariant (unit-pinned)."""
+    store = _store(path)
+    with store.begin() as txn:
+        n_vecs = txn.rewrite(
+            "codes",
+            files_per_partition(
+                store.live(spark, "codes"), "coarse", files_per_cell
+            ),
+            partition_by="coarse",
+            count=True,
         )
-        .repartition("coarse", "__salt")
-        .drop("__salt"),
-        path,
-        new_meta,
-    )
-    _write_meta(path, new_meta)  # the atomic commit
-    shutil.rmtree(old_dir, ignore_errors=True)
-    shutil.rmtree(old_tombs, ignore_errors=True)
-    return new_meta
+        txn.rewrite("tombs")
+        return txn.commit(n_vecs=n_vecs).view()
 
 
 def query_ivfpq_index_batch(
@@ -925,7 +777,8 @@ def _batch_shortlist_scored(
     :func:`query_ivfpq_index_batch` (windows it to k) and
     :func:`audit_ivfpq_recall` (counts it — per-probe shortlist size is
     the drift monitor's efficiency number)."""
-    meta = read_ivfpq_meta(path)
+    store = _store(path)
+    meta = store.meta
     residual = meta.get("encode", "plain") == "residual"
     id_col, vec_col = meta["id_col"], meta["vec_col"]
     dim, half, pq_k = meta["dim"], meta["dim"] // 2, meta["pq_k"]
@@ -1165,7 +1018,7 @@ def _batch_shortlist_scored(
             F.explode(F.col("__probed")).alias("__g"),
         )
     p_join = F.broadcast(p_side) if broadcast_probes else p_side
-    cand = _live_codes(spark, path, meta).join(
+    cand = store.live(spark, "codes").join(
         p_join, F.col("coarse") == F.col("__g")
     )
     code_key = (

@@ -8,34 +8,25 @@ The reference's operating model is daily incremental ingest
 re-counting every word n-gram of a 100 TB corpus per day to decide
 what is "repeated" is the passage tier's largest avoidable cost. This
 module keeps the corpus-wide gram counts AT REST so each delta pays
-only for itself:
+only for itself. Families (``sources/fragstore.py`` owns the layout and
+the commit):
 
-- ``grams_v{G}/frag_{K}/`` — ``(gram, cnt)`` parquet fragments. The
-  build writes ``frag_0``; every ingest appends ONE fragment holding
-  only the delta's gram counts; readers aggregate
-  ``sum(cnt) GROUP BY gram`` over the committed fragments. Unlike the
-  signature index's band fragments (tolerant to re-appends because
-  candidates are distinct-ed), COUNTS are additive — a blindly retried
-  append would double-count — so fragments commit via the sidecar:
-  ``n_fragments`` names how many are live, the fragment is written
-  FIRST and the pointer bump is the atomic commit. A crash between
-  write and bump leaves an orphan ``frag_{K}`` that the next
-  ingest/compaction sweeps (provably uncommitted: the pointer never
-  reached it).
-- ``ids_v{G}/frag_{K}/`` — ``(id)`` of every indexed document, the
-  identity ledger: ingest anti-joins the delta against it, so
-  re-ingesting the same delta (the retried-Airflow-task case) adds
-  nothing — idempotence by construction, same contract as
-  ``dedupe_index``.
-- ``_PASSAGE_META.json`` — frozen parameters (``n``, column names) +
-  the generation/fragment pointers.
+- ``grams`` — ``(gram, cnt)``. The build writes the first fragment;
+  every ingest appends ONE fragment holding only the delta's gram
+  counts; readers aggregate ``sum(cnt) GROUP BY gram`` over the
+  committed fragments. COUNTS are additive, so a fragment must become
+  visible exactly once — which the store's commit guarantees.
+- ``ids`` — ``(id)`` of every indexed document, the identity ledger:
+  ingest anti-joins the delta against it, so re-ingesting the same
+  delta (the retried-Airflow-task case) adds nothing — idempotence by
+  construction, same contract as ``dedupe_index``.
 
-Compaction (:func:`compact_passage_index`) aggregates all committed
-fragments into ``frag_0`` of the NEXT generation and flips both
-pointers in one sidecar write — the Delta-OPTIMIZE shape shared with
-the other two indexes; after it the read-side group-by touches one
-right-sized relation. Gram counts only ever AGGREGATE (sum is
-associative), so compaction is a pure rewrite.
+The sidecar (``_PASSAGE_META.json``) freezes ``n``, ``key_mode`` and
+the column names. Compaction (:func:`compact_passage_index`)
+aggregates all committed fragments into one fragment of the next
+generation — after it the read-side group-by touches one right-sized
+relation. Gram counts only ever AGGREGATE (sum is associative), so
+compaction is a pure rewrite.
 
 Equivalence contract (driver-checked at sf0.01 by
 ``incremental_passage_scrub_stats``): ``build(prior); ingest(d1); ...;
@@ -56,24 +47,21 @@ it would run anyway; at 100 TB the gram key becomes ``xxhash64(gram)``
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from neulix_datahub_spark.operators.dedupe_index import (
-    _assert_unique_ids,
-    _n_parquet_files,
-    _write_meta,
-)
 from neulix_datahub_spark.operators.passages import (
     _merge_hits_into_runs,
     _scrub_with_runs,
+    _with_gram_key,
     positioned_token_grams,
 )
-
-_PASSAGE_META = "_PASSAGE_META.json"
+from neulix_datahub_spark.sources.fragstore import (
+    IndexStore,
+    assert_unique_ids,
+    create_index,
+    open_index,
+)
 
 __all__ = [
     "build_passage_index",
@@ -85,61 +73,15 @@ __all__ = [
 ]
 
 
+def _store(path: str) -> IndexStore:
+    return open_index(path, "passage")
+
+
 def read_passage_meta(path: str) -> dict:
-    import json
-
-    with open(os.path.join(path, _PASSAGE_META), encoding="utf-8") as f:
-        return json.load(f)
-
-
-# internal alias — the module body reads the sidecar a lot
-_read_meta = read_passage_meta
-
-
-def _gen_dir(path: str, meta: dict, family: str) -> str:
-    return os.path.join(path, f"{family}_v{meta['generation']}")
-
-
-def _frag_dir(path: str, meta: dict, family: str, k: int) -> str:
-    return os.path.join(_gen_dir(path, meta, family), f"frag_{k}")
-
-
-def _committed_frags(path: str, meta: dict, family: str) -> list[str]:
-    return [
-        _frag_dir(path, meta, family, k) for k in range(meta["n_fragments"])
-    ]
-
-
-def _sweep_orphans(path: str, meta: dict) -> None:
-    """Remove (a) generation dirs below the committed generation pointer
-    and (b) fragment dirs AT OR ABOVE ``n_fragments`` inside the live
-    generation — both are provably uncommitted debris from a crash
-    between a write and its pointer bump."""
-    try:
-        entries = os.listdir(path)
-    except FileNotFoundError:
-        return
-    for d in entries:
-        for fam in ("grams", "ids"):
-            prefix = f"{fam}_v"
-            if d.startswith(prefix) and d[len(prefix):].isdigit():
-                if int(d[len(prefix):]) < meta["generation"]:
-                    shutil.rmtree(os.path.join(path, d), ignore_errors=True)
-    for fam in ("grams", "ids"):
-        gen = _gen_dir(path, meta, fam)
-        try:
-            frags = os.listdir(gen)
-        except FileNotFoundError:
-            continue
-        for d in frags:
-            if d.startswith("frag_") and d[len("frag_"):].isdigit():
-                if int(d[len("frag_"):]) >= meta["n_fragments"]:
-                    shutil.rmtree(os.path.join(gen, d), ignore_errors=True)
+    return _store(path).view("grams")
 
 
 def _delta_gram_counts(df: DataFrame, meta: dict) -> DataFrame:
-    from neulix_datahub_spark.operators.passages import _with_gram_key
-
     grams = _with_gram_key(
         positioned_token_grams(df, meta["text_col"], meta["id_col"], meta["n"]),
         meta.get("key_mode", "string"),
@@ -156,83 +98,54 @@ def build_passage_index(
     key_mode: str = "string",
 ) -> dict:
     """One-shot batch build: persist the corpus gram counts and the id
-    ledger as ``frag_0`` of generation 0. Parameters are frozen into
-    the sidecar — including ``key_mode`` (``'hash'`` stores
-    ``xxhash64`` gram keys, the 100 TB at-rest/shuffle-width mode; see
+    ledger as the first fragment. Parameters are frozen into the
+    sidecar — including ``key_mode`` (``'hash'`` stores ``xxhash64``
+    gram keys, the 100 TB at-rest/shuffle-width mode; see
     ``passages._with_gram_key``) — so the index can never mix gram
     widths or key kinds."""
     if key_mode not in ("string", "hash"):
         raise ValueError(f"key_mode must be 'string' or 'hash', got {key_mode!r}")
-    _assert_unique_ids(df, id_col, "build_passage_index")
-    meta = {
-        "n": n, "text_col": text_col, "id_col": id_col,
-        "key_mode": key_mode,
-        "generation": 0, "n_fragments": 0,
-    }
-    _delta_gram_counts(df, meta).write.mode("overwrite").parquet(
-        _frag_dir(path, meta, "grams", 0)
-    )
-    ids = df.select(F.col(id_col).alias("id"))
-    # n_docs rides the ids write as an Observation (the
-    # _write_codes_counted discipline): one saved re-read per build
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    ids.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
-        "overwrite"
-    ).parquet(_frag_dir(path, meta, "ids", 0))
-    meta["n_docs"] = int(obs.get["n"])
-    meta["n_fragments"] = 1  # the commit: fragment 0 becomes visible
-    _write_meta(path, meta, _PASSAGE_META)
-    return meta
+    assert_unique_ids(df, id_col, "build_passage_index")
+    meta = {"n": n, "text_col": text_col, "id_col": id_col, "key_mode": key_mode}
+    with create_index(path, "passage", meta) as txn:
+        txn.append("grams", _delta_gram_counts(df, meta))
+        n_docs = txn.append(
+            "ids", df.select(F.col(id_col).alias("id")), count=True
+        )
+        return txn.commit(n_docs=n_docs).view("grams")
 
 
 def ingest_passage_delta(spark: SparkSession, delta: DataFrame, path: str) -> dict:
     """Incremental ingest: count ONLY the never-seen delta rows' grams
-    into a new fragment, append the ids, and commit by bumping
-    ``n_fragments`` in the sidecar (the atomic point). Returns
+    into one new fragment and append their ids. Returns
     ``{n_new, n_fragments}``.
 
     The at-rest gram relation is never read; the only prior state
     scanned is the one-column id ledger (the idempotence anti-join).
     """
-    meta = _read_meta(path)
-    id_col = meta["id_col"]
-    _sweep_orphans(path, meta)
-
-    known = (
-        spark.read.parquet(*_committed_frags(path, meta, "ids"))
-        .select(F.col("id").alias(id_col))
-    )
-    # pin FIRST: the anti-join feeds the emptiness probe, the gram
-    # counts, the id projection and the count — one execution, not four
-    # (lazy: the count is itself the materializing pass, so the pin
-    # costs no extra evaluation)
-    new = delta.join(known, id_col, "left_anti").localCheckpoint(eager=False)
-    n_new = new.count()
+    store = _store(path)
+    new, n_new = store.stage_delta(spark, delta, "ids")
     if n_new == 0:
-        return {"n_new": 0, "n_fragments": meta["n_fragments"]}
-    _assert_unique_ids(new, id_col, "ingest_passage_delta")
+        return {"n_new": 0, "n_fragments": store.n_fragments("grams")}
+    with store.begin() as txn:
+        txn.append("grams", _delta_gram_counts(new, store.meta))
+        txn.append("ids", new.select(F.col(store.meta["id_col"]).alias("id")))
+        store = txn.commit(n_docs=store.meta["n_docs"] + n_new)
+    return {"n_new": n_new, "n_fragments": store.n_fragments("grams")}
 
-    k = meta["n_fragments"]
-    _delta_gram_counts(new, meta).write.mode("overwrite").parquet(
-        _frag_dir(path, meta, "grams", k)
+
+def _gram_counts(spark: SparkSession, store: IndexStore) -> DataFrame:
+    return (
+        store.read(spark, "grams")
+        .groupBy("gram")
+        .agg(F.sum("cnt").alias("cnt"))
     )
-    new.select(F.col(id_col).alias("id")).write.mode("overwrite").parquet(
-        _frag_dir(path, meta, "ids", k)
-    )
-    meta["n_fragments"] = k + 1  # the commit
-    meta["n_docs"] = meta["n_docs"] + n_new
-    _write_meta(path, meta, _PASSAGE_META)
-    return {"n_new": n_new, "n_fragments": meta["n_fragments"]}
 
 
 def read_passage_gram_counts(spark: SparkSession, path: str) -> DataFrame:
     """Corpus-wide gram counts from the committed fragments:
     ``(gram, cnt)`` with ``cnt`` summed across fragments."""
-    meta = _read_meta(path)
-    frags = spark.read.parquet(*_committed_frags(path, meta, "grams"))
-    return frags.groupBy("gram").agg(F.sum("cnt").alias("cnt"))
+    return _gram_counts(spark, _store(path))
 
 
 def scrub_against_passage_index(
@@ -250,12 +163,11 @@ def scrub_against_passage_index(
     corpus, which is the point."""
     if min_count < 2:
         raise ValueError(f"min_count must be >= 2, got {min_count}")
-    from neulix_datahub_spark.operators.passages import _with_gram_key
-
-    meta = _read_meta(path)
+    store = _store(path)
+    meta = store.meta
     text_col, id_col, n = meta["text_col"], meta["id_col"], meta["n"]
     repeated = (
-        read_passage_gram_counts(spark, path)
+        _gram_counts(spark, store)
         .filter(F.col("cnt") >= min_count)
         .select("gram")
     )
@@ -269,34 +181,20 @@ def scrub_against_passage_index(
 
 
 def compact_passage_index(spark: SparkSession, path: str, files: int = 8) -> dict:
-    """Maintenance: aggregate all committed fragments into ``frag_0`` of
-    the NEXT generation (counts summed — a pure rewrite, sum is
-    associative) and flip generation + fragment pointers in ONE sidecar
-    write. Returns the fragment/file-count log."""
-    meta = _read_meta(path)
-    _sweep_orphans(path, meta)
+    """Maintenance: aggregate all committed fragments into one fragment
+    of the next generation (counts summed — a pure rewrite, sum is
+    associative). Returns the fragment/file-count log."""
+    store = _store(path)
     log = {
-        "fragments_before": meta["n_fragments"],
-        "gram_files_before": _n_parquet_files(_gen_dir(path, meta, "grams")),
+        "fragments_before": store.n_fragments("grams"),
+        "gram_files_before": store.n_files("grams"),
     }
-    new_meta = dict(meta, generation=meta["generation"] + 1, n_fragments=1)
-    # a crashed prior compaction may have left the target generation
-    # half-written (the pointer proves it was never committed)
-    for fam in ("grams", "ids"):
-        shutil.rmtree(_gen_dir(path, new_meta, fam), ignore_errors=True)
-    counts = read_passage_gram_counts(spark, path)
-    counts.repartition(files).write.mode("overwrite").parquet(
-        _frag_dir(path, new_meta, "grams", 0)
-    )
-    ids = spark.read.parquet(*_committed_frags(path, meta, "ids"))
-    ids.repartition(max(1, files // 4)).write.mode("overwrite").parquet(
-        _frag_dir(path, new_meta, "ids", 0)
-    )
-    _write_meta(path, new_meta, _PASSAGE_META)  # the atomic commit
-    for fam in ("grams", "ids"):
-        shutil.rmtree(_gen_dir(path, meta, fam), ignore_errors=True)
+    with store.begin() as txn:
+        txn.rewrite("grams", _gram_counts(spark, store).repartition(files))
+        txn.rewrite(
+            "ids", store.read(spark, "ids").repartition(max(1, files // 4))
+        )
+        store = txn.commit()
     log["fragments_after"] = 1
-    log["gram_files_after"] = _n_parquet_files(
-        _gen_dir(path, new_meta, "grams")
-    )
+    log["gram_files_after"] = store.n_files("grams")
     return log

@@ -23,44 +23,39 @@ it too: scoring reads every input through the live (tombstone-
 anti-joined) relation, so a post-delete query equals a from-scratch
 rebuild without the deleted documents.
 
-Layout under ``path``:
+Families (``sources/fragstore.py`` owns the layout, the tombstone
+ledger, the sweep and the commit):
 
-- ``postings_v{G}/frag_{K}/bkt=<b>/`` — ``(token, id, tf)`` parquet
-  fragments, partitioned by ``bkt = crc32(token) % n_buckets``: a
-  query computes its terms' buckets driver-side (zlib.crc32 is the
-  exact Python twin of Spark's ``crc32``, unit-pinned), so non-queried
-  token DIRECTORIES are never read — the inverted-index analogue of
-  the IVF coarse-cell directory pruning. Each document's postings live
-  entirely inside ONE fragment (tf needs no cross-fragment merge), so
-  fragments are unioned, never aggregated.
-- ``doclens_v{G}/frag_{K}/`` — ``(id, dl)`` for EVERY ingested
-  document (``dl = 0`` for empty/all-stopword docs), doubling as the
-  identity ledger: ingest anti-joins the delta against it, so a
-  redelivered batch adds nothing — idempotence by construction, same
-  contract as the sibling indexes. Scoring statistics use the
-  ``dl > 0`` rows (the batch tier's semantics: a document with no
-  tokens is invisible to retrieval).
-- ``positions_v{G}/frag_{K}/bkt=<b>/`` — ``(token, id, pos)``, the
-  phrase-capable family (``positional=True`` builds only): one row
-  per token OCCURRENCE, same bucketing, NOT stopword-filtered (a
-  phrase is a property of consecutive positions — dropping a token
-  would silently break 'state of the art'; the Lucene trade). Every
-  per-document fact, so the exactness theorem covers it unchanged.
-- ``tombs_v{G}/`` — ``(id)`` tombstones; every read path anti-joins
-  the ledger (bounded, broadcast). Final-until-compaction: a
-  tombstoned id cannot be re-ingested until compaction purges it
-  physically (resurrection-by-append would strand two at-rest posting
-  sets behind one tombstone), the ``ivfpq_index`` semantics.
-- ``_SEARCH_META.json`` — frozen parameters (columns, ``n_buckets``,
-  ``k1``/``b``, stopwords) + the generation/fragment pointers.
+- ``postings`` — ``(token, id, tf)`` partitioned by ``bkt =
+  crc32(token) % n_buckets``: a query computes its terms' buckets
+  driver-side (zlib.crc32 is the exact Python twin of Spark's
+  ``crc32``, unit-pinned), so non-queried token DIRECTORIES are never
+  read — the inverted-index analogue of the IVF coarse-cell directory
+  pruning. Each document's postings live entirely inside ONE fragment
+  (tf needs no cross-fragment merge), so fragments are unioned, never
+  aggregated.
+- ``doclens`` — ``(id, dl)`` for EVERY ingested document (``dl = 0``
+  for empty/all-stopword docs), doubling as the identity ledger:
+  ingest anti-joins the delta against it, so a redelivered batch adds
+  nothing — idempotence by construction, same contract as the sibling
+  indexes. Scoring statistics use the ``dl > 0`` rows (the batch
+  tier's semantics: a document with no tokens is invisible to
+  retrieval).
+- ``positions`` — ``(token, id, pos)``, the phrase-capable family
+  (``positional=True`` builds only): one row per token OCCURRENCE,
+  same bucketing, NOT stopword-filtered (a phrase is a property of
+  consecutive positions — dropping a token would silently break 'state
+  of the art'; the Lucene trade). Every per-document fact, so the
+  exactness theorem covers it unchanged.
+- ``tombs`` — deleted ids; every read path anti-joins them.
+  Final-until-compaction: a tombstoned id cannot be re-ingested until
+  compaction purges it physically (resurrection-by-append would strand
+  two at-rest posting sets behind one tombstone), the ``ivfpq_index``
+  semantics.
 
-Fragments commit via the sidecar (the ``passage_index`` discipline):
-the fragment is written FIRST, the ``n_fragments`` bump is the atomic
-commit, and a crash between the two leaves an orphan ``frag_{K}`` the
-next ingest/compaction sweeps — provably uncommitted, the pointer
-never reached it. Compaction unions the live fragments into
-``frag_0`` of the NEXT generation (purging tombstones physically) and
-flips generation + fragment pointers in one sidecar write.
+The sidecar (``_SEARCH_META.json``) freezes the columns, ``n_buckets``,
+``k1``/``b`` and the stopwords. Compaction unions the live fragments
+into one fragment of the next generation, purging tombstones.
 
 avgdl determinism: ``dl`` is integral and document counts are exact,
 so ``avgdl = sum(dl)/N`` is bit-deterministic across partitionings and
@@ -88,26 +83,23 @@ lookup), persisted form.
 
 from __future__ import annotations
 
-import os
-import shutil
 import zlib
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from neulix_datahub_spark.operators.dedupe_index import (
-    _assert_unique_ids,
-    _n_parquet_files,
-    _write_meta,
-)
 from neulix_datahub_spark.operators.search import (
     bm25_rank,
     build_inverted_index,
     conjunctive_search,
     normalize_terms,
 )
-
-_SEARCH_META = "_SEARCH_META.json"
+from neulix_datahub_spark.sources.fragstore import (
+    IndexStore,
+    assert_unique_ids,
+    create_index,
+    open_index,
+)
 
 __all__ = [
     "build_search_index",
@@ -127,61 +119,12 @@ __all__ = [
 ]
 
 
+def _store(path: str) -> IndexStore:
+    return open_index(path, "search")
+
+
 def read_search_meta(path: str) -> dict:
-    import json
-
-    with open(os.path.join(path, _SEARCH_META), encoding="utf-8") as f:
-        return json.load(f)
-
-
-_read_meta = read_search_meta
-
-_FAMILIES = ("postings", "doclens")
-
-
-def _families(meta: dict) -> tuple[str, ...]:
-    return _FAMILIES + (
-        ("positions",) if meta.get("positional") else ()
-    )
-
-
-def _family_schema(meta: dict, family: str):
-    from pyspark.sql.types import StructType
-
-    import json as _json
-
-    return StructType.fromJson(_json.loads(meta["schemas"][family]))
-
-
-def _read_frags(
-    spark: SparkSession, path: str, meta: dict, family: str
-) -> DataFrame:
-    """Committed fragments of a family as ONE partitioned read (r14,
-    guide §6): fragments are key=value directories (``frag=K``), so the
-    whole generation is a single partition-discovery root — one scan
-    node with ``frag < n_fragments`` as a PartitionFilter (uncommitted
-    orphans pruned by the pointer, never read) instead of the old
-    per-fragment union whose plan and listing grew linearly in
-    fragment count. The sidecar's FROZEN schema is still passed: a
-    fragment whose delta produced no rows (an all-empty-text batch
-    writes only _SUCCESS) has no schema-bearing parquet file, so
-    inference would throw UNABLE_TO_INFER_SCHEMA — found by the
-    round-13 hypothesis corpus property, not the hand fixtures. Spark
-    appends the ``frag`` partition column to the explicit schema; it
-    is dropped after the pruning filter, so readers see the exact
-    frozen columns."""
-    gen = _gen_dir(path, meta, family)
-    df = (
-        spark.read.option("basePath", gen)
-        .schema(_family_schema(meta, family))
-        .parquet(gen)
-    )
-    # a generation whose fragments are ALL row-empty has no data files,
-    # so no partition column is discovered — the relation is already
-    # empty with the frozen schema and there is nothing to prune
-    if "frag" in df.columns:
-        df = df.filter(F.col("frag") < meta["n_fragments"]).drop("frag")
-    return df
+    return _store(path).view("postings")
 
 
 def token_bucket(token: str, n_buckets: int) -> int:
@@ -195,50 +138,6 @@ def token_bucket(token: str, n_buckets: int) -> int:
 
 def _bucket_col(n_buckets: int) -> F.Column:
     return F.pmod(F.crc32(F.col("token")), F.lit(n_buckets)).cast("int")
-
-
-def _gen_dir(path: str, meta: dict, family: str) -> str:
-    return os.path.join(path, f"{family}_v{meta['generation']}")
-
-
-def _frag_dir(path: str, meta: dict, family: str, k: int) -> str:
-    # key=value form: the fragment id is a partition COLUMN, so one
-    # read of the generation root covers every committed fragment and
-    # the n_fragments pointer becomes a partition filter (see
-    # _read_frags)
-    return os.path.join(_gen_dir(path, meta, family), f"frag={k}")
-
-
-def _tombs_dir(path: str, meta: dict) -> str:
-    return os.path.join(path, f"tombs_v{meta['generation']}")
-
-
-def _sweep_orphans(path: str, meta: dict) -> None:
-    """Remove (a) family/tombstone dirs below the committed generation
-    pointer and (b) fragment dirs AT OR ABOVE ``n_fragments`` inside
-    the live generation — both provably uncommitted debris from a
-    crash between a write and its pointer bump (the passage_index
-    discipline)."""
-    try:
-        entries = os.listdir(path)
-    except FileNotFoundError:
-        return
-    for d in entries:
-        for fam in _families(meta) + ("tombs",):
-            prefix = f"{fam}_v"
-            if d.startswith(prefix) and d[len(prefix):].isdigit():
-                if int(d[len(prefix):]) < meta["generation"]:
-                    shutil.rmtree(os.path.join(path, d), ignore_errors=True)
-    for fam in _families(meta):
-        gen = _gen_dir(path, meta, fam)
-        try:
-            frags = os.listdir(gen)
-        except FileNotFoundError:
-            continue
-        for d in frags:
-            if d.startswith("frag=") and d[len("frag="):].isdigit():
-                if int(d[len("frag="):]) >= meta["n_fragments"]:
-                    shutil.rmtree(os.path.join(gen, d), ignore_errors=True)
 
 
 def _delta_postings(df: DataFrame, meta: dict) -> DataFrame:
@@ -294,22 +193,6 @@ def _delta_doclens(df: DataFrame, postings: DataFrame, meta: dict) -> DataFrame:
     )
 
 
-def _write_doclens_counted(doclens, dest: str) -> int:
-    """Write a doclens fragment and return its row count from an
-    Observation riding the write job (one row per document, so the
-    count IS the fragment's doc count) — saves the full read-back the
-    count-it-back form paid per build/compact."""
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    (
-        doclens.observe(obs, F.count(F.lit(1)).alias("n"))
-        .write.mode("overwrite")
-        .parquet(dest)
-    )
-    return int(obs.get["n"])
-
-
 def build_search_index(
     df: DataFrame,
     path: str,
@@ -322,176 +205,64 @@ def build_search_index(
     positional: bool = False,
 ) -> dict:
     """One-shot batch build: persist the corpus postings (bucket-
-    partitioned) and the doc-length ledger as ``frag_0`` of generation
-    0 — plus, with ``positional=True``, the phrase-capable
-    ``(token, id, pos)`` family. Parameters freeze into the sidecar —
-    including the stopword list and positional mode, so index and
-    queries can never disagree on what was indexed."""
+    partitioned) and the doc-length ledger as the first fragment — plus,
+    with ``positional=True``, the phrase-capable ``(token, id, pos)``
+    family. Parameters freeze into the sidecar — including the stopword
+    list and positional mode, so index and queries can never disagree
+    on what was indexed."""
     if n_buckets < 1:
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-    _assert_unique_ids(df, id_col, "build_search_index")
+    assert_unique_ids(df, id_col, "build_search_index")
     meta = {
         "text_col": text_col, "id_col": id_col,
         "n_buckets": int(n_buckets),
         "k1": float(k1), "b": float(b),
         "stopwords": sorted(stopwords) if stopwords else [],
         "positional": bool(positional),
-        "generation": 0, "n_fragments": 0,
     }
-    postings = _delta_postings(df, meta)
-    # freeze every family's schema into the sidecar: a later fragment
-    # may be row-empty (all-empty-text delta) and carry no
-    # schema-bearing file, so readers can never rely on inference
-    doclens_shape = _delta_doclens(df, postings.limit(0), meta)
-    meta["schemas"] = {
-        "postings": postings.schema.json(),
-        "doclens": doclens_shape.schema.json(),
-    }
-    if positional:
-        meta["schemas"]["positions"] = _delta_positions(
-            df.limit(0), meta
-        ).schema.json()
-    postings.write.mode("overwrite").partitionBy("bkt").parquet(
-        _frag_dir(path, meta, "postings", 0)
-    )
-    if positional:
-        _delta_positions(df, meta).write.mode("overwrite").partitionBy(
-            "bkt"
-        ).parquet(_frag_dir(path, meta, "positions", 0))
-    spark = df.sparkSession
-    # doclens from the postings AT REST (not the lazy plan), so dl is
-    # derived from exactly the rows the commit makes visible
-    landed = spark.read.schema(
-        _family_schema(meta, "postings")
-    ).parquet(_frag_dir(path, meta, "postings", 0))
-    meta["n_docs"] = _write_doclens_counted(
-        _delta_doclens(df, landed, meta), _frag_dir(path, meta, "doclens", 0)
-    )
-    meta["n_fragments"] = 1  # the commit: fragment 0 becomes visible
-    _write_meta(path, meta, _SEARCH_META)
-    return meta
+    with create_index(path, "search", meta) as txn:
+        txn.append("postings", _delta_postings(df, meta), partition_by="bkt")
+        if positional:
+            txn.append(
+                "positions", _delta_positions(df, meta), partition_by="bkt"
+            )
+        # doclens from the staged postings (not the lazy plan), so dl is
+        # derived from exactly the rows the commit makes visible
+        n_docs = txn.append(
+            "doclens",
+            _delta_doclens(df, txn.read_staged(df.sparkSession, "postings"), meta),
+            count=True,
+        )
+        return txn.commit(n_docs=n_docs).view("postings")
 
 
 def ingest_search_delta(spark: SparkSession, delta: DataFrame, path: str) -> dict:
     """Incremental ingest: tokenize ONLY the never-seen delta rows into
-    a new postings fragment, append their lengths to the ledger, and
-    commit by bumping ``n_fragments`` in the sidecar (the atomic
-    point). Returns ``{n_new, n_fragments}``.
+    one new postings fragment and append their lengths to the ledger.
+    Returns ``{n_new, n_fragments}``.
 
     The at-rest postings are never read; the only prior state scanned
     is the one-column id ledger (the idempotence anti-join) and the
     tombstone ledger (re-ingest of a deleted id refuses until
     compaction purges it — the resurrection guard shared with
     ``ingest_ivfpq_delta``)."""
-    meta = _read_meta(path)
-    id_col = meta["id_col"]
-    _sweep_orphans(path, meta)
-
-    # ONE staged pass over the delta (r14, guide §5 — was three jobs:
-    # the tombstone-overlap probe, the anti-join count, and the
-    # unique-id aggregate, each a full delta scan): mark each delta row
-    # dead (tombstone ledger, broadcast — bounded between compactions)
-    # and known (id-ledger LEFT join — same shuffle shape the old
-    # left_anti paid), pin the marked rows lazily, and read every
-    # validation number out of one aggregate, which doubles as the
-    # pin's materializing action. Checks, precedence and messages are
-    # unchanged: tombstoned ids refuse first, an all-known delta
-    # returns before uniqueness runs, and uniqueness (nulls, then
-    # duplicates) is judged on the NEW rows only, exactly as the old
-    # post-anti-join _assert_unique_ids did. The pin now holds the
-    # full delta rather than only the new rows — still delta-bounded.
-    tombs = _tombs_dir(path, meta)
-    staged = delta
-    if os.path.isdir(tombs) and any(
-        f.endswith(".parquet") for f in os.listdir(tombs)
-    ):
-        dead = (
-            spark.read.parquet(tombs)
-            .select(F.col("id").alias(id_col), F.lit(1).alias("__dead"))
-            .distinct()
-        )
-        staged = staged.join(F.broadcast(dead), id_col, "left")
-    else:
-        staged = staged.withColumn("__dead", F.lit(None).cast("int"))
-    known = _read_frags(spark, path, meta, "doclens").select(
-        F.col("id").alias("__kid"), F.lit(1).alias("__known")
-    )
-    staged = staged.join(
-        known, staged[id_col] == known["__kid"], "left"
-    ).drop("__kid").localCheckpoint(eager=False)
-    is_new = F.col("__known").isNull()
-    v = staged.agg(
-        F.count(F.when(F.col("__dead") == 1, 1)).alias("n_dead"),
-        F.count(F.when(is_new, 1)).alias("n_new"),
-        F.count(F.when(is_new & F.col(id_col).isNull(), 1)).alias("nulls"),
-        F.count_distinct(F.when(is_new, F.col(id_col))).alias("d"),
-    ).first()
-    if v["n_dead"]:
-        raise ValueError(
-            "ingest_search_delta: delta contains tombstoned id(s) — "
-            "deletes are final until compaction; run "
-            "compact_search_index first"
-        )
-    n_new = int(v["n_new"])
+    store = _store(path)
+    new, n_new = store.stage_delta(spark, delta, "doclens")
     if n_new == 0:
-        return {"n_new": 0, "n_fragments": meta["n_fragments"]}
-    if v["nulls"]:
-        raise ValueError(
-            f"ingest_search_delta: {v['nulls']} row(s) have NULL "
-            f"{id_col!r} — ids are the index identity and must be "
-            "non-null"
+        return {"n_new": 0, "n_fragments": store.n_fragments("postings")}
+    meta = store.meta
+    with store.begin() as txn:
+        txn.append("postings", _delta_postings(new, meta), partition_by="bkt")
+        if meta.get("positional"):
+            txn.append(
+                "positions", _delta_positions(new, meta), partition_by="bkt"
+            )
+        txn.append(
+            "doclens",
+            _delta_doclens(new, txn.read_staged(spark, "postings"), meta),
         )
-    if n_new != int(v["d"]):
-        raise ValueError(
-            f"ingest_search_delta: {n_new - int(v['d'])} duplicate "
-            f"{id_col!r} row(s) in the batch — deduplicate upstream "
-            "(e.g. exact_dedup or dropDuplicates) before indexing; "
-            "admitting them would corrupt the one-row-per-id labels "
-            "grain"
-        )
-    new = staged.filter(is_new).drop("__dead", "__known")
-
-    k = meta["n_fragments"]
-    _delta_postings(new, meta).write.mode("overwrite").partitionBy(
-        "bkt"
-    ).parquet(_frag_dir(path, meta, "postings", k))
-    if meta.get("positional"):
-        _delta_positions(new, meta).write.mode("overwrite").partitionBy(
-            "bkt"
-        ).parquet(_frag_dir(path, meta, "positions", k))
-    landed = spark.read.schema(
-        _family_schema(meta, "postings")
-    ).parquet(_frag_dir(path, meta, "postings", k))
-    _delta_doclens(new, landed, meta).write.mode("overwrite").parquet(
-        _frag_dir(path, meta, "doclens", k)
-    )
-    meta["n_fragments"] = k + 1  # the commit
-    meta["n_docs"] = meta["n_docs"] + n_new
-    _write_meta(path, meta, _SEARCH_META)
-    return {"n_new": n_new, "n_fragments": meta["n_fragments"]}
-
-
-def _dead_ids(spark: SparkSession, path: str, meta: dict) -> DataFrame | None:
-    tombs = _tombs_dir(path, meta)
-    if os.path.isdir(tombs) and any(
-        f.endswith(".parquet") for f in os.listdir(tombs)
-    ):
-        return spark.read.parquet(tombs).select("id").distinct()
-    return None
-
-
-def _live_family(
-    spark: SparkSession, path: str, meta: dict, family: str
-) -> DataFrame:
-    """Committed fragments of a bucket-partitioned family, unioned
-    per-root (each fragment carries its own ``bkt=`` partition tree —
-    Spark refuses multi-root partition discovery; the bucket filter
-    still prunes inside every root) minus the tombstone ledger."""
-    rows = _read_frags(spark, path, meta, family)
-    dead = _dead_ids(spark, path, meta)
-    if dead is not None:
-        rows = rows.join(F.broadcast(dead), "id", "left_anti")
-    return rows
+        store = txn.commit(n_docs=meta["n_docs"] + n_new)
+    return {"n_new": n_new, "n_fragments": store.n_fragments("postings")}
 
 
 def read_live_postings(spark: SparkSession, path: str) -> DataFrame:
@@ -499,27 +270,30 @@ def read_live_postings(spark: SparkSession, path: str) -> DataFrame:
     aggregated — each document's rows are complete within one
     fragment) minus the tombstone ledger. Every retrieval path reads
     through this, so a deleted document can never score."""
-    return _live_family(spark, path, _read_meta(path), "postings")
+    return _store(path).live(spark, "postings")
 
 
-def read_live_positions(spark: SparkSession, path: str) -> DataFrame:
-    """The phrase-capable ``(token, id, pos)`` rows (positional
-    indexes only) — live, like the postings."""
-    meta = _read_meta(path)
-    if not meta.get("positional"):
+def _live_positions(spark: SparkSession, store: IndexStore) -> DataFrame:
+    if not store.meta.get("positional"):
         raise ValueError(
             "this search index was built without positional=True — "
             "phrase retrieval needs the (token, id, pos) family; "
             "rebuild with build_search_index(..., positional=True)"
         )
-    return _live_family(spark, path, meta, "positions")
+    return store.live(spark, "positions")
+
+
+def read_live_positions(spark: SparkSession, path: str) -> DataFrame:
+    """The phrase-capable ``(token, id, pos)`` rows (positional
+    indexes only) — live, like the postings."""
+    return _live_positions(spark, _store(path))
 
 
 def read_live_doclens(spark: SparkSession, path: str) -> DataFrame:
     """The live ``(id, dl)`` ledger (tombstones excluded) — the
     statistics relation: N and avgdl derive from its ``dl > 0`` rows,
     recomputed per query, which is what makes deletes scoring-exact."""
-    return _live_family(spark, path, _read_meta(path), "doclens")
+    return _store(path).live(spark, "doclens")
 
 
 def delete_from_search_index(
@@ -532,36 +306,33 @@ def delete_from_search_index(
     post-delete query is bit-equal to a rebuild without the deleted
     docs — the delete inherits the index's exactness theorem. Returns
     ``{n_deleted_request, n_tombstones, n_live}``."""
-    meta = _read_meta(path)
-    id_col = meta["id_col"]
-    req = ids.select(F.col(id_col).alias("id")).distinct()
-    n_req = req.count()
-    if n_req:
-        req.write.mode("append").parquet(_tombs_dir(path, meta))
-    dead = spark.read.parquet(_tombs_dir(path, meta)).select("id").distinct()
-    n_tombs = dead.count()
-    n_live = (
-        _read_frags(spark, path, meta, "doclens")
-        .join(F.broadcast(dead), "id", "left_anti")
-        .count()
-    )
-    return {
-        "n_deleted_request": n_req,
-        "n_tombstones": n_tombs,
-        "n_live": n_live,
-    }
+    return _store(path).delete(spark, ids, "doclens")
 
 
-def _pruned_postings(
-    spark: SparkSession, path: str, meta: dict, terms: list[str]
-) -> DataFrame:
-    """The terms' postings with the bucket filter FIRST: ``bkt`` is the
+def _pruned(rows: DataFrame, meta: dict, terms: list[str]) -> DataFrame:
+    """The terms' rows with the bucket filter FIRST: ``bkt`` is the
     partition column, so ``bkt IN (...)`` prunes non-queried token
     directories before the token equality even runs — the driver names
     the buckets via the crc32 twin, no data touched."""
     buckets = sorted({token_bucket(t, meta["n_buckets"]) for t in terms})
-    return read_live_postings(spark, path).filter(
+    return rows.filter(
         F.col("bkt").isin(buckets) & F.col("token").isin(list(terms))
+    )
+
+
+def _pruned_postings(
+    spark: SparkSession, store: IndexStore, terms: list[str]
+) -> DataFrame:
+    return _pruned(store.live(spark, "postings"), store.meta, terms).select(
+        "token", F.col("id").alias(store.meta["id_col"]), "tf"
+    )
+
+
+def _pruned_positions(
+    spark: SparkSession, store: IndexStore, terms: list[str]
+) -> DataFrame:
+    return _pruned(_live_positions(spark, store), store.meta, terms).select(
+        "token", F.col("id").alias(store.meta["id_col"]), "pos"
     )
 
 
@@ -574,19 +345,17 @@ def query_search_index(
     uses (df per term over the live postings, N/avgdl over the live
     ``dl > 0`` ledger — all recomputed, nothing stale). Returns
     ``(id_col, score)``; callers round before ranking, as ever."""
-    meta = _read_meta(path)
+    store = _store(path)
+    meta = store.meta
     uniq = list(set(normalize_terms(terms)))
-    postings = _pruned_postings(spark, path, meta, uniq).select(
-        "token", F.col("id").alias(meta["id_col"]), "tf"
-    )
     lengths = (
-        read_live_doclens(spark, path)
+        store.live(spark, "doclens")
         .filter(F.col("dl") > 0)
         .select(F.col("id").alias(meta["id_col"]), "dl")
     )
     return bm25_rank(
-        postings, lengths, uniq, k1=meta["k1"], b=meta["b"],
-        id_col=meta["id_col"],
+        _pruned_postings(spark, store, uniq), lengths, uniq,
+        k1=meta["k1"], b=meta["b"], id_col=meta["id_col"],
     )
 
 
@@ -596,12 +365,12 @@ def conjunctive_search_index(
     """Boolean AND retrieval against the at-rest index — the batch
     tier's ``conjunctive_search`` over the bucket-pruned live
     postings. Returns ``(id_col)``."""
-    meta = _read_meta(path)
+    store = _store(path)
     uniq = list(set(normalize_terms(terms)))
-    postings = _pruned_postings(spark, path, meta, uniq).select(
-        "token", F.col("id").alias(meta["id_col"]), "tf"
+    return conjunctive_search(
+        _pruned_postings(spark, store, uniq), uniq,
+        id_col=store.meta["id_col"],
     )
-    return conjunctive_search(postings, uniq, id_col=meta["id_col"])
 
 
 def phrase_search_index(
@@ -615,15 +384,12 @@ def phrase_search_index(
     answerable. Returns ``(id_col, n_occurrences)``."""
     from neulix_datahub_spark.operators.search import phrase_search
 
-    meta = _read_meta(path)
+    store = _store(path)
     toks = normalize_terms(phrase)
-    buckets = sorted({token_bucket(t, meta["n_buckets"]) for t in toks})
-    pos = (
-        read_live_positions(spark, path)
-        .filter(F.col("bkt").isin(buckets) & F.col("token").isin(toks))
-        .select("token", F.col("id").alias(meta["id_col"]), "pos")
+    return phrase_search(
+        _pruned_positions(spark, store, toks), toks,
+        id_col=store.meta["id_col"],
     )
-    return phrase_search(pos, toks, id_col=meta["id_col"])
 
 
 def proximity_search_index(
@@ -635,17 +401,14 @@ def proximity_search_index(
     only its term's bucket-pruned live rows). Callers filter
     ``min_span <= slop`` or rank by it. Returns
     ``(id_col, min_span, n_combos)``."""
-    meta = _read_meta(path)
-    toks = sorted(set(normalize_terms(terms)))
-    buckets = sorted({token_bucket(t, meta["n_buckets"]) for t in toks})
-    pos = (
-        read_live_positions(spark, path)
-        .filter(F.col("bkt").isin(buckets) & F.col("token").isin(toks))
-        .select("token", F.col("id").alias(meta["id_col"]), "pos")
-    )
     from neulix_datahub_spark.operators.search import proximity_spans
 
-    return proximity_spans(pos, toks, id_col=meta["id_col"])
+    store = _store(path)
+    toks = sorted(set(normalize_terms(terms)))
+    return proximity_spans(
+        _pruned_positions(spark, store, toks), toks,
+        id_col=store.meta["id_col"],
+    )
 
 
 def keyword_snippets_index(
@@ -665,7 +428,8 @@ def keyword_snippets_index(
     corpus form (unit-pinned)."""
     from neulix_datahub_spark.operators.search import keyword_snippets
 
-    meta = _read_meta(path)
+    store = _store(path)
+    meta = store.meta
     if not meta.get("positional"):
         raise ValueError(
             "this search index was built without positional=True — "
@@ -673,62 +437,42 @@ def keyword_snippets_index(
             "use keyword_snippets over the corpus instead"
         )
     uniq = list(set(normalize_terms(terms)))
-    buckets = sorted({token_bucket(t, meta["n_buckets"]) for t in uniq})
-    pos = (
-        read_live_positions(spark, path)
-        .filter(F.col("bkt").isin(buckets) & F.col("token").isin(uniq))
-        .select("token", F.col("id").alias(meta["id_col"]), "pos")
-    )
     return keyword_snippets(
         docs,
         terms,
         window=window,
         text_col=meta["text_col"],
         id_col=meta["id_col"],
-        pos_index=pos,
+        pos_index=_pruned_positions(spark, store, uniq),
     )
 
 
 def compact_search_index(spark: SparkSession, path: str, files: int = 8) -> dict:
     """Maintenance: union the live fragments (tombstones purged
-    physically) into ``frag_0`` of the NEXT generation and flip
-    generation + fragment pointers in ONE sidecar write — postings are
-    per-document facts, so compaction is a pure rewrite (no
+    physically) into one fragment of the next generation — postings
+    are per-document facts, so compaction is a pure rewrite (no
     aggregation), and the next generation starts with an empty
     tombstone ledger. Returns the fragment/file-count log."""
-    meta = _read_meta(path)
-    _sweep_orphans(path, meta)
+    store = _store(path)
     log = {
-        "fragments_before": meta["n_fragments"],
-        "posting_files_before": _n_parquet_files(
-            _gen_dir(path, meta, "postings")
-        ),
+        "fragments_before": store.n_fragments("postings"),
+        "posting_files_before": store.n_files("postings"),
     }
-    new_meta = dict(meta, generation=meta["generation"] + 1, n_fragments=1)
-    # a crashed prior compaction may have left the target generation
-    # half-written (the pointer proves it was never committed)
-    for fam in _families(meta):
-        shutil.rmtree(_gen_dir(path, new_meta, fam), ignore_errors=True)
-    read_live_postings(spark, path).repartition(files).write.mode(
-        "overwrite"
-    ).partitionBy("bkt").parquet(_frag_dir(path, new_meta, "postings", 0))
-    if meta.get("positional"):
-        _live_family(spark, path, meta, "positions").repartition(
-            files
-        ).write.mode("overwrite").partitionBy("bkt").parquet(
-            _frag_dir(path, new_meta, "positions", 0)
+    with store.begin() as txn:
+        for fam in ("postings", "positions"):
+            if fam in store.meta["families"]:
+                txn.rewrite(
+                    fam, store.live(spark, fam).repartition(files),
+                    partition_by="bkt",
+                )
+        n_docs = txn.rewrite(
+            "doclens",
+            store.live(spark, "doclens").repartition(max(1, files // 4)),
+            count=True,
         )
-    new_meta["n_docs"] = _write_doclens_counted(
-        read_live_doclens(spark, path).repartition(max(1, files // 4)),
-        _frag_dir(path, new_meta, "doclens", 0),
-    )
-    _write_meta(path, new_meta, _SEARCH_META)  # the atomic commit
-    for fam in _families(meta):
-        shutil.rmtree(_gen_dir(path, meta, fam), ignore_errors=True)
-    shutil.rmtree(_tombs_dir(path, meta), ignore_errors=True)
+        txn.rewrite("tombs")
+        store = txn.commit(n_docs=n_docs)
     log["fragments_after"] = 1
-    log["posting_files_after"] = _n_parquet_files(
-        _gen_dir(path, new_meta, "postings")
-    )
-    log["n_docs"] = new_meta["n_docs"]
+    log["posting_files_after"] = store.n_files("postings")
+    log["n_docs"] = n_docs
     return log

@@ -7,17 +7,16 @@ exact word-bigram Jaccard; at a daily ingest cadence re-running the
 all-pairs cosine over the full corpus per day is the same avoidable
 cost the MinHash index eliminates for text. This module persists
 
-- ``vectors_v{N}/``  ``(id, vec)`` — embeddings cast to double (the
+- ``vectors`` — ``(id, vec)``, embeddings cast to double (the
   deterministic arithmetic the oracles' ``::DOUBLE[]`` uses),
-- ``shingles_v{N}/`` the hashed word-bigram sets the Jaccard verify
-  reads instead of re-shingling prior text,
-- ``labels_v{N}/``   ``(id, component)`` — the dedup state,
+- ``shingles`` — the hashed word-bigram sets the Jaccard verify reads
+  instead of re-shingling prior text,
+- ``labels`` — ``(id, component)``, the dedup state,
 
-under the same sidecar-pointer-flip commit protocol, id-anti-join
-idempotence, stale-generation sweeping and reduced-graph label
-extension (:func:`~neulix_datahub_spark.operators.dedupe_index
-.extend_labels`) as the text index — one protocol, two feature
-families.
+with the id-anti-join idempotence and reduced-graph label extension
+(:func:`~neulix_datahub_spark.operators.dedupe_index.extend_labels`) of
+the text index, on the shared fragment store (``sources/fragstore.py``)
+— one protocol, two feature families.
 
 Candidate generation REUSES
 :func:`~neulix_datahub_spark.operators.similarity
@@ -36,7 +35,7 @@ corpus dot products — the honest baseline, exhaustive recall.
 (:func:`~neulix_datahub_spark.operators.similarity
 .vector_banded_signatures` — data-independent seeded hyperplanes, so
 the candidate set stays a pure function of the vector and the
-incremental == batch theorem survives) persists a ``bands_v{N}``
+incremental == batch theorem survives) persists a ``bands``
 relation exactly like the text index's, and the per-delta candidate
 join becomes delta-bands ⋈ at-rest-bands — an equi-join whose small
 side AQE broadcasts, replacing the delta × corpus cross entirely.
@@ -48,9 +47,6 @@ documented SimHash/banding trade, parameter-controlled.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -60,11 +56,9 @@ from neulix_datahub_spark.operators.dedupe import (
     verify_pairs_with_shingles,
 )
 from neulix_datahub_spark.operators.dedupe_index import (
-    _assert_unique_ids,
+    _labels_of,
+    _rebalanced,
     _self_pairs,
-    _sweep_stale_generations,
-    _write_bands,
-    _write_meta,
     extend_labels,
 )
 from neulix_datahub_spark.operators.similarity import (
@@ -73,8 +67,13 @@ from neulix_datahub_spark.operators.similarity import (
     embedding_near_duplicates,
     vector_banded_signatures,
 )
-
-_SEM_META = "_SEMANTIC_META.json"
+from neulix_datahub_spark.sources.fragstore import (
+    IndexStore,
+    assert_unique_ids,
+    create_index,
+    files_per_partition,
+    open_index,
+)
 
 # ``candidates="auto"`` crossover: below this many corpus rows the
 # all-pairs exact mode wins (O(n²) on a small n beats the banding
@@ -88,29 +87,16 @@ _SEM_META = "_SEMANTIC_META.json"
 _AUTO_BANDED_MIN_ROWS = 50_000
 
 
+def _store(path: str) -> IndexStore:
+    return open_index(path, "semantic")
+
+
 def read_semantic_meta(path: str) -> dict:
-    import json
-
-    with open(os.path.join(path, _SEM_META), encoding="utf-8") as f:
-        return json.load(f)
-
-
-def _write_sem_meta(path: str, meta: dict) -> None:
-    _write_meta(path, meta, filename=_SEM_META)
+    return _store(path).view()
 
 
 def read_semantic_labels(spark: SparkSession, path: str) -> DataFrame:
-    meta = read_semantic_meta(path)
-    return spark.read.parquet(
-        os.path.join(path, f"labels_v{meta['labels_version']}")
-    )
-
-
-def _dirs(path: str, meta: dict) -> tuple[str, str]:
-    return (
-        os.path.join(path, f"vectors_v{meta.get('vectors_version', 0)}"),
-        os.path.join(path, f"shingles_v{meta.get('shingles_version', 0)}"),
-    )
+    return _store(path).read(spark, "labels")
 
 
 #: Size gate for the Arrow precision stage (r14): when the index's
@@ -235,22 +221,27 @@ def _cosine_pairs(
     Tiered (r14): a bounded uniform-dim vector relation takes the
     ``mapInArrow`` stage (:func:`_cosine_pairs_arrow` — pairs-only
     boundary traffic, no vector joins, no interpreted per-pair fold);
-    anything larger, ragged or null-bearing keeps the join + HOF form
-    below, whose per-pair expression the Arrow tier reproduces
-    bit-for-bit (parity unit-pinned)."""
+    anything larger, ragged, null-bearing or with duplicate ids keeps
+    the join + HOF form below, whose per-pair expression the Arrow tier
+    reproduces bit-for-bit (parity unit-pinned). Duplicate ids route to
+    the join form because the Arrow tier's id → row map keeps one
+    vector per id, while the joins emit one row per matching
+    duplicate."""
     spark = pairs.sparkSession
     gate = _driver_max_vectors(spark)
     if gate:
-        # one sizing aggregate (count + dim uniformity + nulls) — the
-        # same job the count-only gate would pay
+        # one sizing aggregate (count + distinct ids + dim uniformity +
+        # nulls) — the same job the count-only gate would pay
         s = vectors.agg(
             F.count(F.lit(1)).alias("n"),
+            F.count_distinct("id").alias("d"),
             F.count(F.when(F.col("vec").isNull(), 1)).alias("nulls"),
             F.min(F.size("vec")).alias("dmin"),
             F.max(F.size("vec")).alias("dmax"),
         ).first()
         if (
             0 < int(s["n"]) <= gate
+            and int(s["d"]) == int(s["n"])
             and not int(s["nulls"])
             and s["dmin"] is not None
             and int(s["dmin"]) == int(s["dmax"])
@@ -315,7 +306,7 @@ def _shingles_for(docs: DataFrame, ids: DataFrame, meta: dict) -> DataFrame:
     embedding with no docs row at all would be permanently inert (its
     cosine candidates exist but can never Jaccard-verify — a silent
     hole in the dedup state). Both are refused, same convention as
-    ``_assert_unique_ids``. NULL-text rows are fine: they carry no
+    ``fragstore.check_ids``. NULL-text rows are fine: they carry no
     shingles by the shared ``shingle_projection`` contract, in both
     the batch and incremental paths alike."""
     scoped = docs.join(
@@ -363,7 +354,7 @@ def build_semantic_index(
 ) -> dict:
     """One-shot batch build: cosine candidates (``candidates="exact"``
     all-pairs, or ``"banded"`` sign-LSH band collisions + exact-cosine
-    precision stage with a persisted ``bands_v0`` relation) → exact
+    precision stage with a persisted ``bands`` family) → exact
     bigram-Jaccard verify → connected components, persisted with the
     parameters frozen into the sidecar.
 
@@ -388,7 +379,7 @@ def build_semantic_index(
     _validate_grid_threshold(jaccard_threshold)
     if candidates not in ("exact", "banded", "auto"):
         raise ValueError(f"unknown candidates mode {candidates!r}")
-    _assert_unique_ids(emb, id_col, "build_semantic_index")
+    assert_unique_ids(emb, id_col, "build_semantic_index")
     if candidates == "auto":
         import logging
 
@@ -418,52 +409,32 @@ def build_semantic_index(
         "id_col": id_col, "vec_col": vec_col,
         "doc_id_col": doc_id_col, "text_col": text_col,
         "candidates": candidates,
-        "labels_version": 0, "vectors_version": 0, "shingles_version": 0,
     }
     if candidates == "banded":
-        meta.update(
-            {"num_planes": num_planes, "bands": bands, "seed": seed,
-             "bands_version": 0}
-        )
+        meta.update({"num_planes": num_planes, "bands": bands, "seed": seed})
     spark = emb.sparkSession
-    vec_dir, sh_dir = _dirs(path, meta)
-    _vectors(emb, id_col, vec_col).write.mode("overwrite").parquet(vec_dir)
-    vectors = spark.read.parquet(vec_dir)
-    _shingles_for(docs, vectors.select("id"), meta).write.mode(
-        "overwrite"
-    ).parquet(sh_dir)
-    sh = spark.read.parquet(sh_dir)
-    if candidates == "banded":
-        _write_bands(
-            _bands_of(vectors, meta), os.path.join(path, "bands_v0"),
-            "overwrite",
+    with create_index(path, "semantic", meta) as txn:
+        txn.append("vectors", _vectors(emb, id_col, vec_col))
+        vectors = txn.read_staged(spark, "vectors")
+        txn.append("shingles", _shingles_for(docs, vectors.select("id"), meta))
+        sh = txn.read_staged(spark, "shingles")
+        if candidates == "banded":
+            txn.append(
+                "bands", _rebalanced(_bands_of(vectors, meta)),
+                partition_by="band",
+            )
+            band_rows = txn.read_staged(spark, "bands")
+            cand = _cosine_pairs(_self_pairs(band_rows), vectors, cos_threshold)
+        else:
+            cand = embedding_near_duplicates(
+                vectors, threshold=cos_threshold, vec_col="vec", id_col="id"
+            )
+        edges = verify_pairs_with_shingles(cand, sh, jaccard_threshold)
+        n_docs = txn.append(
+            "labels", _labels_of(vectors.select("id"), edges, max_iter),
+            count=True,
         )
-        band_rows = spark.read.parquet(os.path.join(path, "bands_v0"))
-        cand = _cosine_pairs(_self_pairs(band_rows), vectors, cos_threshold)
-    else:
-        cand = embedding_near_duplicates(
-            vectors, threshold=cos_threshold, vec_col="vec", id_col="id"
-        )
-    edges = verify_pairs_with_shingles(cand, sh, jaccard_threshold)
-    from neulix_datahub_spark.operators.components import connected_components
-
-    comps = connected_components(edges, max_iter=max_iter)
-    labels = (
-        vectors.select("id").join(comps, "id", "left")
-        .select("id", F.coalesce("component", F.col("id")).alias("component"))
-    )
-    # n_docs rides the labels write as an Observation (the
-    # _write_codes_counted discipline): one saved re-read of the
-    # freshly written labels per build
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    labels.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(path, "labels_v0"))
-    meta["n_docs"] = int(obs.get["n"])
-    _write_sem_meta(path, meta)
-    return meta
+        return txn.commit(n_docs=n_docs).view()
 
 
 def ingest_semantic_delta(
@@ -483,35 +454,25 @@ def ingest_semantic_delta(
     delta↔prior and delta↔delta pairs surface exactly once each and
     prior↔prior pairs (resolved at build) are never re-emitted; the
     Jaccard verify reads persisted shingles; labels extend through the
-    shared reduced graph; commit is the pointer flip. Idempotent by
-    the id anti-join."""
-    meta = read_semantic_meta(path)
-    id_col = meta["id_col"]
-    labels = read_semantic_labels(spark, path)
-
-    known = labels.select(F.col("id").alias(id_col))
-    new = emb_delta.join(known, id_col, "left_anti")
-    if new.isEmpty():
+    shared reduced graph. Idempotent by the id anti-join."""
+    store = _store(path)
+    meta = store.meta
+    new, n_new = store.stage_delta(spark, emb_delta, "labels")
+    if n_new == 0:
         return {
             "n_new": 0, "n_candidates": 0, "n_edges": 0,
-            "labels_version": meta["labels_version"],
+            "labels_version": store.view()["labels_version"],
         }
-    # lazy pin: the uniqueness aggregate is the materializing pass
-    new = new.localCheckpoint(eager=False)
-    _assert_unique_ids(new, id_col, "ingest_semantic_delta")
-    _sweep_stale_generations(path, meta)
-
-    vec_dir, sh_dir = _dirs(path, meta)
     # lazy pins: the shingle-correspondence aggregate inside
     # _shingles_for materializes nvec; the n_edges count materializes
     # nsh/nbands — no dedicated pass per pin
-    nvec = _vectors(new, id_col, meta["vec_col"]).localCheckpoint(
+    nvec = _vectors(new, meta["id_col"], meta["vec_col"]).localCheckpoint(
         eager=False
     )
     nsh = _shingles_for(docs_delta, nvec.select("id"), meta).localCheckpoint(
         eager=False
     )
-    prior_vec = spark.read.parquet(vec_dir)
+    prior_vec = store.read(spark, "vectors")
     nbands: DataFrame | None = None
     if meta.get("candidates") == "banded":
         # the 100 TB shape: delta-bands ⋈ at-rest-bands equi-join (the
@@ -519,13 +480,9 @@ def ingest_semantic_delta(
         # plus intra-delta self-pairs, then the exact-cosine precision
         # stage reads only the candidate ids' vectors
         nbands = _bands_of(nvec, meta).localCheckpoint(eager=False)
-        bands_dir = os.path.join(
-            path, f"bands_v{meta.get('bands_version', 0)}"
-        )
-        prior_bands = spark.read.parquet(bands_dir)
         cross = (
             nbands.alias("d")
-            .join(prior_bands.alias("p"), ["band", "band_hash"])
+            .join(store.read(spark, "bands").alias("p"), ["band", "band_hash"])
             .select(
                 F.least(F.col("d.id"), F.col("p.id")).alias("id_a"),
                 F.greatest(F.col("d.id"), F.col("p.id")).alias("id_b"),
@@ -543,7 +500,7 @@ def ingest_semantic_delta(
             both, threshold=meta["cos_threshold"], vec_col="vec", id_col="id",
             probe_filter=F.col("__new"),
         ).drop("cos_sim").localCheckpoint(eager=False)
-    sh_all = spark.read.parquet(sh_dir).unionByName(nsh)
+    sh_all = store.read(spark, "shingles").unionByName(nsh)
     # lazy checkpoints throughout: the n_edges count is the single
     # materializing pass that pins cand AND edges (eager checkpoints
     # paid one dedicated pass each on top of it)
@@ -553,35 +510,22 @@ def ingest_semantic_delta(
 
     n_edges = edges.count()
     final = extend_labels(
-        labels, edges, nvec.select("id"), n_edges, max_iter
+        store.read(spark, "labels"), edges, nvec.select("id"), n_edges,
+        max_iter,
     )
-
-    nvec.write.mode("append").parquet(vec_dir)
-    nsh.write.mode("append").parquet(sh_dir)
-    if nbands is not None:
-        _write_bands(
-            nbands,
-            os.path.join(path, f"bands_v{meta.get('bands_version', 0)}"),
-            "append",
-        )
-    new_version = meta["labels_version"] + 1
-    final.write.mode("overwrite").parquet(
-        os.path.join(path, f"labels_v{new_version}")
-    )
-    stats = {
-        "n_new": nvec.count(),
+    with store.begin() as txn:
+        txn.append("vectors", nvec)
+        txn.append("shingles", nsh)
+        if nbands is not None:
+            txn.append("bands", _rebalanced(nbands), partition_by="band")
+        txn.rewrite("labels", final)
+        store = txn.commit(n_docs=meta["n_docs"] + n_new)
+    return {
+        "n_new": n_new,
         "n_candidates": cand.count(),
         "n_edges": n_edges,
-        "labels_version": new_version,
+        "labels_version": store.view()["labels_version"],
     }
-    old_version = meta["labels_version"]
-    meta["labels_version"] = new_version
-    meta["n_docs"] = meta["n_docs"] + stats["n_new"]
-    _write_sem_meta(path, meta)
-    shutil.rmtree(
-        os.path.join(path, f"labels_v{old_version}"), ignore_errors=True
-    )
-    return stats
 
 
 def compact_semantic_index(
@@ -594,55 +538,37 @@ def compact_semantic_index(
     """Maintenance twin of :func:`~neulix_datahub_spark.operators
     .dedupe_index.compact_dedup_index`: rewrite the appended-to feature
     relations (vectors, shingles, and — in banded mode — the
-    band-partitioned bands) into IMMUTABLE next generations with
-    right-sized files, committed together by ONE sidecar pointer flip.
-    A crash before the flip leaves the old generations live; a retry
-    clears the provably-orphaned targets (the pointer still references
-    the old generations) and rewrites. Pure rewrite — row sets
-    unchanged, proven by the invariance unit test. Returns the
-    file-count log."""
-    from neulix_datahub_spark.operators.dedupe_index import _n_parquet_files
-    from neulix_datahub_spark.sources.io import compact_partitioned_parquet
-
-    meta = read_semantic_meta(path)
-    _sweep_stale_generations(path, meta)
-    old_v, old_sh = _dirs(path, meta)
-    banded = meta.get("candidates") == "banded"
-    new_meta = dict(
-        meta,
-        vectors_version=meta.get("vectors_version", 0) + 1,
-        shingles_version=meta.get("shingles_version", 0) + 1,
-    )
+    band-partitioned bands) into next generations with right-sized
+    files, committed together. Pure rewrite — row sets unchanged,
+    proven by the invariance unit test. Returns the file-count log."""
+    store = _store(path)
+    banded = "bands" in store.meta["families"]
+    log = {
+        "vector_files_before": store.n_files("vectors"),
+        "shingle_files_before": store.n_files("shingles"),
+    }
     if banded:
-        new_meta["bands_version"] = meta.get("bands_version", 0) + 1
-    new_v, new_sh = _dirs(path, new_meta)
-    shutil.rmtree(new_v, ignore_errors=True)
-    shutil.rmtree(new_sh, ignore_errors=True)
-    log = {"vector_files_before": _n_parquet_files(old_v),
-           "shingle_files_before": _n_parquet_files(old_sh)}
-    spark.read.parquet(old_v).repartition(vector_files).write.mode(
-        "overwrite"
-    ).parquet(new_v)
-    spark.read.parquet(old_sh).repartition(shingle_files).write.mode(
-        "overwrite"
-    ).parquet(new_sh)
-    log["vector_files_after"] = _n_parquet_files(new_v)
-    log["shingle_files_after"] = _n_parquet_files(new_sh)
-    old_b = new_b = None
-    if banded:
-        old_b = os.path.join(path, f"bands_v{meta.get('bands_version', 0)}")
-        new_b = os.path.join(path, f"bands_v{new_meta['bands_version']}")
-        shutil.rmtree(new_b, ignore_errors=True)
-        band_log = compact_partitioned_parquet(
-            spark, old_b, new_b, ["band"], files_per_band
+        log["band_files_before"] = store.n_files("bands")
+    with store.begin() as txn:
+        txn.rewrite(
+            "vectors", store.read(spark, "vectors").repartition(vector_files)
         )
-        log["band_files_before"] = band_log["files_before"]
-        log["band_files_after"] = band_log["files_after"]
-    _write_sem_meta(path, new_meta)  # the atomic commit for ALL rewrites
-    shutil.rmtree(old_v, ignore_errors=True)
-    shutil.rmtree(old_sh, ignore_errors=True)
-    if old_b is not None:
-        shutil.rmtree(old_b, ignore_errors=True)
+        txn.rewrite(
+            "shingles", store.read(spark, "shingles").repartition(shingle_files)
+        )
+        if banded:
+            txn.rewrite(
+                "bands",
+                files_per_partition(
+                    store.read(spark, "bands"), "band", files_per_band
+                ),
+                partition_by="band",
+            )
+        store = txn.commit()
+    log["vector_files_after"] = store.n_files("vectors")
+    log["shingle_files_after"] = store.n_files("shingles")
+    if banded:
+        log["band_files_after"] = store.n_files("bands")
     return log
 
 

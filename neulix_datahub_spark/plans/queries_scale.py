@@ -1732,7 +1732,7 @@ def ivfpq_delete_lifecycle_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     needs that the r12 lifecycle lacked — dedup removals and
     right-to-be-forgotten both delete by id. ``delete_from_ivfpq_index``
     appends the ids to a tombstone ledger; every query path reads
-    through the broadcast anti-join (``_live_codes``), so a deleted id
+    through the broadcast tombstone anti-join, so a deleted id
     can never be returned; ``compact_ivfpq_index`` purges tombstoned
     rows physically, recounts, and starts the next generation with an
     empty ledger under the same pointer-flip commit.
@@ -2249,7 +2249,7 @@ def _ivfpq_oracle_sql(
     (n_new, n_vecs). ``deletes`` (round 13) replays the tombstone
     lifecycle: the even-numbered plants are deleted, so the funnel and
     the exact side both read the LIVE relation (corpus minus tombstones
-    — what _live_codes serves), with the delete bookkeeping columns;
+    — what the live codes serve), with the delete bookkeeping columns;
     compact_invariant / reingest_after_compact_ok are pinned TRUE (the
     oracle cannot replay a physical rewrite — the engine computes them
     for real and a red row would flag divergence)."""
@@ -2437,13 +2437,13 @@ def ivfpq_residual_search_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     Lloyd runs, the triple-cell ADC cut, the re-rank, and the error
     sum."""
     from neulix_datahub_spark.operators.ivfpq_index import (
-        _codes_dir,
         _residual,
         build_ivfpq_index,
         query_ivfpq_index,
         read_ivfpq_meta,
     )
     from neulix_datahub_spark.operators.similarity import _cosine_to_literal
+    from neulix_datahub_spark.sources.fragstore import open_index
     from neulix_datahub_spark.sources.io import warehouse_scratch
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -2493,7 +2493,7 @@ def ivfpq_residual_search_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reconstruction is coarse_centroid + codeword pair, so the error
     # is |residual − codewords|² summed over both halves
     half = meta["dim"] // 2
-    at_rest = spark.read.parquet(_codes_dir(path, meta))
+    at_rest = open_index(path, "ivfpq").read(spark, "codes")
     r = _residual(F.col("vec"), F.col("coarse"), meta["coarse_centroids"])
     from neulix_datahub_spark.operators.similarity import (
         const_double_matrix,

@@ -258,11 +258,10 @@ def test_compaction_is_invariant_and_defragments(spark, tmp_path):
     generations — and changes NOTHING observable: labels identical, a
     post-compaction ingest still produces exactly the batch answer."""
     from neulix_datahub_spark.operators.dedupe_index import (
-        _bands_dir,
-        _shingles_dir,
         build_dedup_index,
         compact_dedup_index,
     )
+    from neulix_datahub_spark.sources.fragstore import open_index
 
     rows = _BASE + _COPIES + [(103, _BASE[2][1].split(" ", 1)[1])]
     p = str(tmp_path / "cidx")
@@ -278,8 +277,9 @@ def test_compaction_is_invariant_and_defragments(spark, tmp_path):
     assert meta["bands_version"] == 1 and meta["shingles_version"] == 1
     assert not os.path.exists(os.path.join(p, "bands_v0"))
     assert not os.path.exists(os.path.join(p, "shingles_v0"))
-    assert os.path.isdir(_bands_dir(p, meta))
-    assert os.path.isdir(_shingles_dir(p, meta))
+    store = open_index(p, "dedup")
+    assert os.path.isdir(store.gen_dir("bands"))
+    assert os.path.isdir(store.gen_dir("shingles"))
     assert _labels_dict(spark, p) == before
 
     # the compacted index keeps composing: one more ingest == full build
@@ -525,7 +525,9 @@ def test_semantic_banded_incremental_equals_batch_and_exact(spark, tmp_path):
 
     meta = read_semantic_meta(p_inc)
     assert meta["candidates"] == "banded" and meta["num_planes"] == 16
-    bands = spark.read.parquet(os.path.join(p_inc, "bands_v0"))
+    from neulix_datahub_spark.sources.fragstore import open_index
+
+    bands = open_index(p_inc, "semantic").read(spark, "bands")
     assert bands.count() == 5 * 8  # one row per (id, band), delta appended
 
     import pytest
@@ -717,8 +719,9 @@ def test_cosine_pairs_arrow_tier_parity(spark):
     join + HOF form it gates over: same rounded cosines, same filtered
     pair set, on adversarial vectors (near-threshold values, zero
     vectors -> NaN cosines, negative components), plus the fallback
-    conditions — unknown pair ids drop like the inner joins, a ragged
-    or null-bearing vector relation routes to the join form."""
+    conditions — unknown pair ids drop like the inner joins, a ragged,
+    null-bearing or duplicate-id vector relation routes to the join
+    form."""
     import random
 
     from neulix_datahub_spark.operators.semantic_index import (
@@ -736,18 +739,30 @@ def test_cosine_pairs_arrow_tier_parity(spark):
         "id_a long, id_b long",
     )
 
-    def run(gate):
+    def run(gate, vs=vectors):
         spark.conf.set("spark.neulix.semantic.driverMaxVectors", str(gate))
         try:
-            return sorted(
-                map(tuple, _cosine_pairs(pairs, vectors, -2.0).collect())
-            )
+            out = _cosine_pairs(pairs, vs, -2.0)
+            plan = out._jdf.queryExecution().analyzed().toString()
+            return sorted(map(tuple, out.collect())), "MapInArrow" in plan
         finally:
             spark.conf.unset("spark.neulix.semantic.driverMaxVectors")
 
-    arrow, join = run(10_000), run(0)
+    (arrow, used_arrow), (join, _) = run(10_000), run(0)
+    assert used_arrow
     assert arrow == join and len(arrow) > 0
     assert all(len(t) == 3 for t in arrow)
+
+    # a duplicate id (two vectors for id 5) takes the join form, which
+    # emits one row per matching duplicate; the Arrow tier's one-vector-
+    # per-id map would silently collapse them
+    dup = spark.createDataFrame(
+        vecs + [(5, vecs[9][1][:])], "id long, vec array<double>"
+    )
+    (dup_gated, used_arrow), (dup_join, _) = run(10_000, dup), run(0, dup)
+    assert not used_arrow
+    assert dup_gated == dup_join
+    assert len(dup_join) == len(join) + 41
 
     # a zero-norm vector raises the SAME ANSI divide-by-zero both ways
     import pytest

@@ -3091,12 +3091,9 @@ def _ivfpq_fixture(spark):
 
 
 def _ivfpq_rows(spark, path):
-    import os
+    from neulix_datahub_spark.sources.fragstore import open_index
 
-    from neulix_datahub_spark.operators.ivfpq_index import read_ivfpq_meta
-
-    gen = read_ivfpq_meta(path)["codes_version"]
-    rows = spark.read.parquet(os.path.join(path, f"codes_v{gen}")).select(
+    rows = open_index(path, "ivfpq").read(spark, "codes").select(
         "id", "coarse", "c0", "c1"
     )
     return sorted(map(tuple, rows.collect()))
@@ -3144,6 +3141,7 @@ def test_ivfpq_query_reads_only_probed_directories(spark, tmp_path):
         build_ivfpq_index,
         query_ivfpq_index,
     )
+    from neulix_datahub_spark.sources.fragstore import open_index
 
     emb, _, _ = _ivfpq_fixture(spark)
     path = str(tmp_path / "idx")
@@ -3154,7 +3152,9 @@ def test_ivfpq_query_reads_only_probed_directories(spark, tmp_path):
                                    top_cells=16)
     probed = set(info["probes"])
     victim = next(c for c in range(4) if c not in probed)
-    vdir = os.path.join(path, "codes_v0", f"coarse={victim}")
+    vdir = os.path.join(
+        open_index(path, "ivfpq").gen_dir("codes"), "frag=0", f"coarse={victim}"
+    )
     assert os.path.isdir(vdir)
     with open(os.path.join(vdir, "part-corrupt.parquet"), "wb") as f:
         f.write(b"this is not parquet")
@@ -3169,7 +3169,6 @@ def test_ivfpq_query_reads_only_probed_directories(spark, tmp_path):
 def test_ivfpq_compaction_invariant_and_defragments(spark, tmp_path):
     # compaction is a pure rewrite: same row multiset, fewer files,
     # pointer-flipped generation; queries answer identically after
-    import glob
     import os
 
     from neulix_datahub_spark.operators.ivfpq_index import (
@@ -3179,6 +3178,7 @@ def test_ivfpq_compaction_invariant_and_defragments(spark, tmp_path):
         query_ivfpq_index,
         read_ivfpq_meta,
     )
+    from neulix_datahub_spark.sources.fragstore import open_index
 
     emb, prior, delta = _ivfpq_fixture(spark)
     path = str(tmp_path / "idx")
@@ -3196,9 +3196,7 @@ def test_ivfpq_compaction_invariant_and_defragments(spark, tmp_path):
     v0 = read_ivfpq_meta(path)["codes_version"]
 
     def nfiles():
-        meta = read_ivfpq_meta(path)
-        d = os.path.join(path, f"codes_v{meta['codes_version']}")
-        return len(glob.glob(os.path.join(d, "coarse=*", "*.parquet")))
+        return open_index(path, "ivfpq").n_files("codes")
 
     frag = nfiles()
     compact_ivfpq_index(spark, path, files_per_cell=1)
@@ -3218,18 +3216,18 @@ def test_ivfpq_residual_encoding_beats_plain(spark, tmp_path):
     # codebook budget, quantizing residuals yields strictly less total
     # reconstruction error than quantizing raw vectors
     from neulix_datahub_spark.operators.ivfpq_index import (
-        _codes_dir,
         _residual,
         build_ivfpq_index,
         read_ivfpq_meta,
     )
+    from neulix_datahub_spark.sources.fragstore import open_index
 
     emb, _, _ = _ivfpq_fixture(spark)
 
     def total_err(path):
         meta = read_ivfpq_meta(path)
         half = meta["dim"] // 2
-        at_rest = spark.read.parquet(_codes_dir(path, meta))
+        at_rest = open_index(path, "ivfpq").read(spark, "codes")
         if meta["encode"] == "residual":
             target = _residual(
                 F.col("vec"), F.col("coarse"), meta["coarse_centroids"]
@@ -3425,17 +3423,15 @@ def test_ivfpq_query_rejects_zero_norm_probes(spark, tmp_path):
 def test_ivfpq_ingest_validates_delta_and_recounts(spark, tmp_path):
     # round 13 ADVICE fixes: an internal duplicate id or a wrong-dim
     # vector in the delta fails loudly instead of corrupting the index,
-    # and n_vecs recounts the codes directory (self-heals a stale
-    # sidecar instead of undercounting forever)
+    # and n_vecs always equals a recount of the codes
     import pytest
 
     from neulix_datahub_spark.operators.ivfpq_index import (
-        _codes_dir,
         build_ivfpq_index,
         ingest_ivfpq_delta,
         read_ivfpq_meta,
-        _write_meta,
     )
+    from neulix_datahub_spark.sources.fragstore import open_index
 
     _, prior, delta = _ivfpq_fixture(spark)
     path = str(tmp_path / "v")
@@ -3451,14 +3447,12 @@ def test_ivfpq_ingest_validates_delta_and_recounts(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="dim"):
         ingest_ivfpq_delta(spark, wrong, path)
-    # simulate a crash between append and sidecar write: rows landed,
-    # counter stale — the next (even fully-redelivered) ingest recounts
-    meta = read_ivfpq_meta(path)
-    true_n = spark.read.parquet(_codes_dir(path, meta)).count()
-    meta["n_vecs"] = true_n - 5
-    _write_meta(path, meta)
+    # n_vecs moves with the atomic commit, so after an ingest it equals
+    # a recount of the at-rest codes (a crash before the commit changes
+    # neither: tests/test_fragstore.py)
     st = ingest_ivfpq_delta(spark, delta, path)
-    assert st["n_vecs"] == true_n + delta.count()
+    true_n = open_index(path, "ivfpq").read(spark, "codes").count()
+    assert st["n_vecs"] == true_n == prior.count() + delta.count()
     assert read_ivfpq_meta(path)["n_vecs"] == st["n_vecs"]
 
 
@@ -3531,12 +3525,9 @@ def test_ivfpq_delete_tombstone_lifecycle(spark, tmp_path):
     # round 13: deletes are tombstones (idempotent, final until
     # compaction), every query path reads through the anti-join, and
     # compaction purges physically + empties the ledger + recounts
-    import os
-
     import pytest
 
     from neulix_datahub_spark.operators.ivfpq_index import (
-        _codes_dir,
         build_ivfpq_index,
         compact_ivfpq_index,
         delete_from_ivfpq_index,
@@ -3545,6 +3536,7 @@ def test_ivfpq_delete_tombstone_lifecycle(spark, tmp_path):
         query_ivfpq_index_batch,
         read_ivfpq_meta,
     )
+    from neulix_datahub_spark.sources.fragstore import open_index
 
     emb, _, _ = _ivfpq_fixture(spark)
     path = str(tmp_path / "del")
@@ -3580,11 +3572,9 @@ def test_ivfpq_delete_tombstone_lifecycle(spark, tmp_path):
     # compaction purges physically, recounts, empties the ledger
     new_meta = compact_ivfpq_index(spark, path)
     assert new_meta["n_vecs"] == n_total - n_dead
-    at_rest = spark.read.parquet(_codes_dir(path, new_meta))
-    assert at_rest.count() == n_total - n_dead
-    assert not os.path.isdir(
-        os.path.join(path, f"tombs_v{new_meta['codes_version']}")
-    )
+    store = open_index(path, "ivfpq")
+    assert store.read(spark, "codes").count() == n_total - n_dead
+    assert store.dead(spark) is None
     # the id is gone from rest, so it is ingestable again
     st3 = ingest_ivfpq_delta(
         spark, emb.join(dead, "vec_id", "semi").limit(1), path
@@ -3605,7 +3595,6 @@ def test_ivfpq_rebuild_structure_and_measured_drift_behavior(spark, tmp_path):
     # This test pins the structural contract and that both audits stay
     # well-formed across the rebuild.
     from neulix_datahub_spark.operators.ivfpq_index import (
-        _codes_dir,
         audit_ivfpq_recall,
         build_ivfpq_index,
         delete_from_ivfpq_index,
@@ -3613,6 +3602,7 @@ def test_ivfpq_rebuild_structure_and_measured_drift_behavior(spark, tmp_path):
         read_ivfpq_meta,
         rebuild_ivfpq_index,
     )
+    from neulix_datahub_spark.sources.fragstore import open_index
 
     emb, _, _ = _ivfpq_fixture(spark)
     path = str(tmp_path / "rb")
@@ -3640,7 +3630,7 @@ def test_ivfpq_rebuild_structure_and_measured_drift_behavior(spark, tmp_path):
     assert meta["codes_version"] == old_meta["codes_version"] + 1
     n_expect = emb.count() + delta.count() - dead.count()
     assert meta["n_vecs"] == n_expect
-    at_rest = spark.read.parquet(_codes_dir(path, meta))
+    at_rest = open_index(path, "ivfpq").read(spark, "codes")
     assert at_rest.count() == n_expect
     assert at_rest.select("id").distinct().count() == n_expect
     after = audit_ivfpq_recall(spark, probes, path, k=10).agg(

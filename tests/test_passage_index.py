@@ -18,6 +18,7 @@ from neulix_datahub_spark.operators.passage_index import (
     scrub_against_passage_index,
 )
 from neulix_datahub_spark.operators.passages import remove_repeated_passages
+from neulix_datahub_spark.sources.fragstore import open_index
 
 
 def _docs(spark, rows):
@@ -98,8 +99,10 @@ def test_orphan_fragment_is_swept_and_never_counted(spark, tmp_path):
     build_passage_index(_docs(spark, _PRIOR), path, n=3)
     meta = read_passage_meta(path)
     # simulate a crash AFTER the fragment write, BEFORE the pointer
-    # bump: a frag_1 exists but n_fragments is still 1
-    orphan = os.path.join(path, "grams_v0", "frag_1")
+    # bump: a frag=1 exists but n_fragments is still 1
+    orphan = os.path.join(
+        open_index(path, "passage").gen_dir("grams"), "frag=1"
+    )
     _docs(spark, _DELTA).sparkSession.createDataFrame(
         [("ghost gram never", 999)], "gram string, cnt long"
     ).write.parquet(orphan)

@@ -265,11 +265,11 @@ def test_r11_incremental_dedup_ingest_join_shapes(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from neulix_datahub_spark.operators.dedupe_index import (
-        _bands_dir,
         _features,
         build_dedup_index,
         read_dedup_meta,
     )
+    from neulix_datahub_spark.sources.fragstore import open_index
 
     docs = [(i, f"doc number {i} with shared vocabulary words") for i in range(40)]
     p = str(tmp_path / "idx")
@@ -280,7 +280,7 @@ def test_r11_incremental_dedup_ingest_join_shapes(spark, tmp_path):
         ["doc_id", "text"],
     )
     nb, _ = _features(delta, "text", "doc_id", meta)
-    prior_bands = spark.read.parquet(_bands_dir(p, meta))
+    prior_bands = open_index(p, "dedup").read(spark, "bands")
     cross = (
         nb.alias("d")
         .join(prior_bands.alias("p"), ["band", "band_hash"])
@@ -326,7 +326,9 @@ def test_r11_banded_semantic_ingest_join_shape(spark, tmp_path):
         [(100, [1.0, 2.0, 3.0])], "vec_id long, embedding array<double>"
     )
     nbands = _bands_of(_vectors(delta, "vec_id", "embedding"), meta)
-    prior_bands = spark.read.parquet(f"{p}/bands_v0")
+    from neulix_datahub_spark.sources.fragstore import open_index
+
+    prior_bands = open_index(p, "semantic").read(spark, "bands")
     cross = (
         nbands.alias("d")
         .join(prior_bands.alias("p"), ["band", "band_hash"])
