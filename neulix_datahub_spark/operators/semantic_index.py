@@ -99,18 +99,20 @@ def read_semantic_labels(spark: SparkSession, path: str) -> DataFrame:
     return _store(path).read(spark, "labels")
 
 
-#: Size gate for the Arrow precision stage (r14): when the index's
-#: vector relation is at or below this many rows (200k × 64-dim double
-#: ≈ 100 MB — a bounded-driver-traffic contract, the components.py
-#: driverMaxEdges precedent), the candidate cosines are computed by a
-#: ``mapInArrow`` stage that ships ONLY the (id_a, id_b) pairs across
-#: the Python boundary (16 B/pair) against a task-resident copy of the
-#: vectors — the two vector equi-joins (each attaching a ~dim×8 B array
-#: per pair side, ~1 KB/pair of join traffic at dim 64) and the
-#: interpreted per-pair HOF dot fold both disappear. Above the gate the
-#: join + HOF form is unchanged — the 100 TB shape. Override per
-#: session with ``spark.conf.set("spark.neulix.semantic.driverMaxVectors",
-#: n)``; 0 disables the Arrow tier everywhere.
+#: Size gate for the Arrow precision stage (r14), in 64-dim vector
+#: equivalents: the index's vector relation takes the Arrow tier when
+#: rows × dim <= this × 64 (200k × 64-dim double ≈ 100 MB — a
+#: bounded-driver-traffic contract, the components.py driverMaxEdges
+#: precedent; a 128-dim relation gets half the rows). The candidate
+#: cosines are then computed by a ``mapInArrow`` stage that ships ONLY
+#: the (id_a, id_b) pairs across the Python boundary (16 B/pair)
+#: against a broadcast copy of the vectors — the two vector equi-joins
+#: (each attaching a ~dim×8 B array per pair side, ~1 KB/pair of join
+#: traffic at dim 64) and the interpreted per-pair HOF dot fold both
+#: disappear. Above the gate the join + HOF form is unchanged — the
+#: 100 TB shape. Override per session with
+#: ``spark.conf.set("spark.neulix.semantic.driverMaxVectors", n)``; 0
+#: disables the Arrow tier everywhere.
 _DRIVER_MAX_VECTORS = 200_000
 
 
@@ -132,8 +134,9 @@ def _cosine_pairs_arrow(
     """Arrow-tier precision stage (guide §4.2/§8: decide with small
     rows — ship 16 B of ids per pair, keep the heavy vectors resident):
     one ``mapInArrow`` pass computes each candidate pair's dot product
-    and the norm product against a collected copy of the (bounded —
-    see :data:`_DRIVER_MAX_VECTORS`) vector relation. Bit-exactness by
+    and the norm product against a collected, broadcast copy of the
+    (bounded — see :data:`_DRIVER_MAX_VECTORS`) vector relation, so the
+    task closure carries only the broadcast handle. Bit-exactness by
     construction: the dot is accumulated dimension-by-dimension over
     the whole batch (``acc = acc + a_k*b_k``), the exact left-to-right
     double association of ``_dot``'s fold, and the norm replicates
@@ -155,6 +158,7 @@ def _cosine_pairs_arrow(
         acc = acc + V[:, k] * V[:, k]
     nrm = np.sqrt(acc)
     index = {r[0]: j for j, r in enumerate(rows)}
+    shipped = pairs.sparkSession.sparkContext.broadcast((V, nrm, index))
 
     out_fields = [
         pairs.schema["id_a"], pairs.schema["id_b"],
@@ -172,6 +176,7 @@ def _cosine_pairs_arrow(
     def gen(batches):
         import pyarrow as pa
 
+        V, nrm, index = shipped.value
         for b in batches:
             ia = np.fromiter(
                 (index.get(x, -1) for x in b.column(0).to_pylist()),
@@ -218,7 +223,8 @@ def _cosine_pairs(
     Same 6-dp rounding as :func:`embedding_near_duplicates`, so the two
     candidate modes share one arithmetic.
 
-    Tiered (r14): a bounded uniform-dim vector relation takes the
+    Tiered (r14): a uniform-dim vector relation within the byte gate
+    (rows × dim, :data:`_DRIVER_MAX_VECTORS`) takes the
     ``mapInArrow`` stage (:func:`_cosine_pairs_arrow` — pairs-only
     boundary traffic, no vector joins, no interpreted per-pair fold);
     anything larger, ragged, null-bearing or with duplicate ids keeps
@@ -240,11 +246,12 @@ def _cosine_pairs(
             F.max(F.size("vec")).alias("dmax"),
         ).first()
         if (
-            0 < int(s["n"]) <= gate
+            int(s["n"]) > 0
             and int(s["d"]) == int(s["n"])
             and not int(s["nulls"])
             and s["dmin"] is not None
             and int(s["dmin"]) == int(s["dmax"])
+            and int(s["n"]) * int(s["dmin"]) <= gate * 64
         ):
             return _cosine_pairs_arrow(
                 pairs, vectors, threshold, int(s["dmin"])

@@ -998,9 +998,9 @@ def stream_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     events stream through stream_agg_maintain_to_parquet, which folds
     each micro-batch's per-type count/sum DELTA into an aggregate
     snapshot table — no Spark aggregation state, exactly-once via the
-    _last_batch_id stamp. The final table must equal the batch groupBy
-    over the same bounded input (the oracle), proving the delta-fold
-    path end-to-end under real micro-batching."""
+    batch stamp its snapshot commit carries. The final table must equal
+    the batch groupBy over the same bounded input (the oracle), proving
+    the delta-fold path end-to-end under real micro-batching."""
     from neulix_datahub_spark.streaming.sinks import (
         read_upsert_table,
         stream_agg_maintain_to_parquet,

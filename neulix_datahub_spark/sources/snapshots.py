@@ -17,12 +17,19 @@ Layout::
       _VERSION          # text file: name of the current snapshot dir
       v00000001/        # immutable parquet snapshot
       v00000002/
+        _STAMP.json     # optional writer stamp (read_stamp)
 
 Guarantees (local/POSIX filesystems; see caveat):
 
 - A reader resolves ``_VERSION`` once, then reads an immutable directory
   — it can NEVER observe a half-written table, because data dirs are
   fully written before the pointer moves and are never modified after.
+- A writer stamp (``write_snapshot(..., stamp=)``, ``commit_tables(...,
+  stamp=)``; the streaming sinks' exactly-once batch bookkeeping) is
+  written INTO the version dir before its rename, so it becomes visible
+  through the same pointer move as the data: a crash or a lost CAS
+  leaves the old data and the old stamp together. The stamp is never a
+  column, so readers and ``snapshot_diff`` see only the data.
 - Publish is ``os.replace`` of the pointer — atomic on POSIX renames.
 - Writers are optimistic: ``publish`` re-reads the pointer and refuses
   (ConcurrentSnapshotError) if it moved since the writer's snapshot was
@@ -40,6 +47,7 @@ over unchanged; only ``_publish_pointer`` would swap implementations.
 
 from __future__ import annotations
 
+import json as _json
 import os
 import tempfile
 import time
@@ -48,6 +56,10 @@ import uuid
 from pyspark.sql import Column, DataFrame, SparkSession
 
 POINTER = "_VERSION"
+#: Writer stamp inside a version dir; the underscore keeps Spark's file
+#: index from reading it as data.
+STAMP = "_STAMP.json"
+_STAMP_LAYOUT = "stamp/1"
 _LOCK = "_VERSION.lock"
 #: Append-only log of SUCCESSFUL pointer publishes ("version epoch\n"
 #: per line, written under the publish lock). Time travel resolves from
@@ -284,12 +296,44 @@ def read_snapshot_table_as_of(
     return read_snapshot_table(spark, root, version=version_at(root, timestamp))
 
 
+def _write_stamp(version_dir: str, stamp: dict | None) -> None:
+    if stamp is not None:
+        with open(os.path.join(version_dir, STAMP), "w", encoding="utf-8") as f:
+            _json.dump({"layout": _STAMP_LAYOUT, **stamp}, f, sort_keys=True)
+
+
+def read_stamp(root: str, version: str | None = None) -> dict | None:
+    """The writer stamp of the current (or a pinned) version, without
+    its ``layout`` key; None when nothing is published or the version
+    carries no stamp. A driver-side file read, never a Spark job. An
+    unknown layout raises rather than being misread."""
+    v = version or current_version(root)
+    if v is None:
+        return None
+    try:
+        with open(os.path.join(root, v, STAMP), encoding="utf-8") as f:
+            stamp = _json.load(f)
+    except FileNotFoundError:
+        return None
+    layout = stamp.pop("layout", None)
+    if layout != _STAMP_LAYOUT:
+        raise ValueError(
+            f"{root}/{v}/{STAMP} has stamp layout {layout!r}; this build "
+            f"reads only {_STAMP_LAYOUT!r}"
+        )
+    return stamp
+
+
 _UNSET = object()
 
 
-def write_snapshot(df: DataFrame, root: str, expected=_UNSET) -> str:
+def write_snapshot(
+    df: DataFrame, root: str, expected=_UNSET, stamp: dict | None = None
+) -> str:
     """Full-table publish: write ``df`` as the next immutable snapshot,
     then atomically move the pointer. Returns the new version name.
+    ``stamp`` (a JSON-able dict) is committed with the data; read it
+    back with :func:`read_stamp`.
 
     ``expected`` is the version this writer's input was derived from
     (pass what you read); the publish CAS-fails if the pointer moved off
@@ -315,6 +359,7 @@ def write_snapshot(df: DataFrame, root: str, expected=_UNSET) -> str:
     version = _next_version(root)
     staging = os.path.join(root, f".{version}_{uuid.uuid4().hex[:8]}")
     df.write.mode("overwrite").parquet(staging)
+    _write_stamp(staging, stamp)
     final = os.path.join(root, version)
     try:
         os.rename(staging, final)
@@ -617,7 +662,6 @@ def vacuum_snapshots(
 # Atomic multi-table commits (catalog layer)
 # ---------------------------------------------------------------------------
 
-import json as _json
 import re as _re
 
 # Member-table names: must not look like a version dir, must not start
@@ -629,7 +673,10 @@ _TABLE_NAME = _re.compile(r"^(?!v\d+$)(?![_.])[A-Za-z0-9_.-]+$")
 
 
 def commit_tables(
-    updates: dict[str, DataFrame], catalog_root: str, expected=_UNSET
+    updates: dict[str, DataFrame],
+    catalog_root: str,
+    expected=_UNSET,
+    stamp: dict | None = None,
 ) -> str:
     """Atomic MULTI-TABLE commit: publish new snapshots for every table
     in ``updates`` under one catalog version, so readers that resolve
@@ -649,6 +696,9 @@ def commit_tables(
 
     Per-table pointers still advance, so single-table readers keep
     working; only catalog readers get the cross-table guarantee.
+    ``stamp`` lands in the catalog's own version dir, beside the
+    manifest (:func:`read_stamp` on ``catalog_root``); ``updates={}``
+    with a stamp republishes every member unchanged under a new stamp.
 
     The WHOLE commit — member publishes, manifest write, catalog CAS —
     runs under the catalog's pointer lock. Ordering matters: member
@@ -689,6 +739,7 @@ def commit_tables(
         os.makedirs(staging)
         with open(os.path.join(staging, "manifest.json"), "w", encoding="utf-8") as f:
             _json.dump({"tables": manifest}, f, sort_keys=True)
+        _write_stamp(staging, stamp)
         final = os.path.join(catalog_root, version)
         try:
             os.rename(staging, final)

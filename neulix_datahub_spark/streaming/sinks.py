@@ -13,6 +13,13 @@ re-publishes idempotently (the keyed MERGE is idempotent, so the extra
 version carries identical content). With Delta available the same
 ``foreachBatch`` body becomes ``MERGE INTO`` and the snapshot
 bookkeeping disappears.
+
+The exactly-once sinks (aggregate, catalog, exact and near-dup dedup)
+keep their batch bookkeeping — batch id, batch content fingerprint and,
+where the replay guard needs it, the cumulative fingerprint — as the
+snapshot commit's stamp (``snapshots.read_stamp``), the analogue of a
+Delta ``txn`` action: one format, published by the same pointer move as
+the data, and never a column a reader sees.
 """
 
 from __future__ import annotations
@@ -24,13 +31,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from neulix_datahub_spark.functions.ranking import (
-    local_relation as _local_relation,
-)
 from neulix_datahub_spark.operators.upsert import upsert
 from neulix_datahub_spark.sources.snapshots import (
+    commit_tables,
     current_version,
+    read_catalog_manifest,
     read_snapshot_table,
+    read_stamp,
     vacuum_snapshots,
     write_snapshot,
 )
@@ -46,6 +53,34 @@ def read_upsert_table(spark: SparkSession, path: str) -> DataFrame | None:
     return read_snapshot_table(spark, path)
 
 
+def _start(
+    stream_df: DataFrame,
+    body,
+    checkpoint_dir: str | None,
+    output_mode: str | None = None,
+) -> StreamingQuery:
+    """Run ``body(batch_df, batch_id)`` on every micro-batch as a
+    bounded ``Trigger.AvailableNow`` drain; long-lived deployments drop
+    the trigger and keep the checkpoint."""
+    writer = stream_df.writeStream.foreachBatch(body).trigger(availableNow=True)
+    if output_mode:
+        writer = writer.outputMode(output_mode)
+    if checkpoint_dir:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    return writer.start()
+
+
+def _publish(
+    df: DataFrame, root: str, stamp: dict | None, retain_versions: int | None
+) -> None:
+    """Publish ``df`` with ``stamp`` as the next snapshot of ``root``,
+    then vacuum all but the ``retain_versions`` newest (None keeps
+    every version)."""
+    write_snapshot(df, root, stamp=stamp)
+    if retain_versions is not None:
+        vacuum_snapshots(root, keep=retain_versions)
+
+
 def stream_upsert_to_parquet(
     stream_df: DataFrame,
     path: str,
@@ -59,7 +94,10 @@ def stream_upsert_to_parquet(
     semantics: within and across micro-batches, the last/greatest-
     ``tiebreak`` row per ``key`` wins. Runs with ``Trigger.AvailableNow``
     (bounded drain); long-lived deployments drop that trigger and keep
-    the checkpoint.
+    the checkpoint. ``output_mode="update"`` turns an AGGREGATED stream
+    into a continuous rollup: each micro-batch hands the changed (key,
+    latest-total) rows to the MERGE (append mode would hold rows back
+    until the watermark finalizes them).
 
     ``retain_versions`` vacuums all but the N newest snapshot versions
     after each publish — a long-lived stream publishes one version per
@@ -73,20 +111,20 @@ def stream_upsert_to_parquet(
         existing = read_upsert_table(spark, path)
         merged = upsert(existing, batch_df, key, tiebreak) if existing is not None \
             else upsert(batch_df.limit(0), batch_df, key, tiebreak)
-        write_snapshot(merged, path)
-        if retain_versions is not None:
-            vacuum_snapshots(path, keep=retain_versions)
+        _publish(merged, path, None, retain_versions)
 
-    writer = stream_df.writeStream.foreachBatch(_merge_batch).trigger(availableNow=True)
-    if output_mode:
-        # "update" turns an AGGREGATED stream into a continuous rollup:
-        # each micro-batch hands the changed (key, latest-total) rows to
-        # the MERGE, materializing the aggregate incrementally (append
-        # mode would hold rows back until the watermark finalizes them).
-        writer = writer.outputMode(output_mode)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _start(stream_df, _merge_batch, checkpoint_dir, output_mode)
+
+
+def _batch_committed(
+    stamp: dict | None, batch_id: int, fp_n: int, fp_x: int
+) -> bool:
+    """The stamp records this very delivery (same batch id, same content
+    fingerprint): the in-flight batch re-delivered under a continuous
+    checkpoint, already committed."""
+    return stamp is not None and (stamp["id"], stamp["n"], stamp["x"]) == (
+        batch_id, fp_n, fp_x
+    )
 
 
 class _ReplayGuard:
@@ -95,7 +133,8 @@ class _ReplayGuard:
     ``stream_commit_tables``). foreachBatch is at-least-once in two
     regimes — an in-flight batch re-delivered under a continuous
     checkpoint, and a full re-delivery after checkpoint loss (ids
-    restart at 0). ``decide()`` classifies each delivery:
+    restart at 0). ``decide()`` classifies each delivery against the
+    committed stamp ``{id, n, x, cn, cx}``:
 
     - ``fold`` — genuinely new content: fold and stamp normally.
     - ``skip`` — continuous-checkpoint replay of the stamped in-flight
@@ -114,11 +153,11 @@ class _ReplayGuard:
     - ``rebuild`` — the re-delivered stream overran the committed
       prefix MID-batch (the restart packed the source into different
       batch boundaries, e.g. a default trigger where the old lineage
-      ran maxFilesPerTrigger=1), or the committed table predates
-      content stamps: replace the table with a fold of the staged
-      rows + this batch. The re-delivered source is the truth, folded
-      exactly once; committed-prefix equality cannot be verified at
-      fingerprint granularity in this regime (documented trade).
+      ran maxFilesPerTrigger=1): replace the table with a fold of the
+      staged rows + this batch. The re-delivered source is the truth,
+      folded exactly once; committed-prefix equality cannot be
+      verified at fingerprint granularity in this regime (documented
+      trade).
 
     Divergence the fingerprints CAN prove — same cumulative row count,
     different cumulative hash — still raises: that is corrupted or
@@ -140,30 +179,17 @@ class _ReplayGuard:
         self.replay_done = True
 
     def decide(self, batch_id: int, fp_n: int, fp_x: int, meta: dict | None) -> str:
-        if meta is None or meta.get("id") is None:
+        if meta is None:
             return "fold"
         if self.mode == "normal":
-            if batch_id == meta["id"] and (fp_n, fp_x) == (
-                meta.get("n"), meta.get("x")
-            ):
+            if _batch_committed(meta, batch_id, fp_n, fp_x):
                 return "skip"
             if self.replay_done or batch_id > meta["id"]:
                 return "fold"
             self.mode = "replay"  # ids restarted: full re-delivery
         self.cum_n += fp_n
         self.cum_x ^= fp_x
-        cn, cx = meta.get("cn"), meta.get("cx")
-        if cn is None:
-            # pre-stamp table: no committed cumulative fingerprint to
-            # verify the prefix against — rebuilding from the
-            # re-delivered source is the only loss-free option
-            _LOG.warning(
-                "replay guard: committed table predates content stamps; "
-                "rebuilding from the re-delivered source without prefix "
-                "verification (batch %d)", batch_id,
-            )
-            self._finish()
-            return "rebuild"
+        cn, cx = meta["cn"], meta["cx"]
         if self.cum_n < cn:
             return "stage"
         if self.cum_n == cn:
@@ -208,33 +234,57 @@ class _ReplayGuard:
         self._finish()
         return "rebuild"
 
+    def deliver(self, root: str, batch_df: DataFrame, batch_id: int,
+                stamp: dict | None, fold, restamp) -> None:
+        """Apply ``decide``'s verdict for one delivery against the
+        committed ``stamp``. ``fold(feed, incremental, new_stamp)``
+        publishes ``feed`` folded onto the committed state
+        (``incremental``) or onto an empty one (a rebuild from the
+        staged rows); ``restamp(new_stamp)`` republishes the committed
+        state unchanged. Every publish carries the stamp of what the
+        table then holds: this batch's (id, fingerprint) and the
+        cumulative fingerprint."""
+        fp_n, fp_x = _batch_fingerprint(batch_df)
+        action = self.decide(batch_id, fp_n, fp_x, stamp)
+        if action == "skip":
+            return
+        if action == "stage":
+            d = os.path.join(root, "_replay_stage", f"b{batch_id}")
+            batch_df.write.mode("overwrite").parquet(d)
+            self.staged.append(d)
+            return
 
-def _stage_dir(root: str, batch_id: int) -> str:
-    return os.path.join(root, "_replay_stage", f"b{batch_id}")
+        def stamped(cn: int, cx: int) -> dict:
+            return {"id": batch_id, "n": fp_n, "x": fp_x, "cn": cn, "cx": cx}
 
+        if action == "fold":
+            cn, cx = (stamp["cn"], stamp["cx"]) if stamp else (0, 0)
+            fold(batch_df, True, stamped(cn + fp_n, cx ^ fp_x))
+            return
+        if action == "restamp":
+            # content unchanged; re-align the stamp with the restarted
+            # lineage so its ids are authoritative from here on
+            restamp(stamped(stamp["cn"], stamp["cx"]))
+        else:  # rebuild from the staged rows + this batch
+            feed = batch_df if not self.staged else (
+                batch_df.sparkSession.read.parquet(*self.staged)
+                .unionByName(batch_df)
+            )
+            fold(feed, False, stamped(self.cum_n, self.cum_x))
+        self._clear_staged(root)
 
-def _stage_batch(run: _ReplayGuard, root: str, batch_df: DataFrame, batch_id: int) -> None:
-    d = _stage_dir(root, batch_id)
-    batch_df.write.mode("overwrite").parquet(d)
-    run.staged.append(d)
+    def _clear_staged(self, root: str) -> None:
+        """Remove the ENTIRE ``_replay_stage`` directory, not just this
+        run's staged paths: a replay that crashed mid-stage leaves
+        orphan batch directories no later run ever references (batch
+        packing can differ across restarts, so the next replay's ids
+        need not cover the old ones), and the replay protocol runs at
+        most once per lineage — by the time a restamp/rebuild clears
+        the stage, nothing under it is live."""
+        import shutil
 
-
-def _read_staged(spark: SparkSession, run: _ReplayGuard) -> DataFrame | None:
-    return spark.read.parquet(*run.staged) if run.staged else None
-
-
-def _clear_staged(run: _ReplayGuard, root: str) -> None:
-    """Remove the ENTIRE ``_replay_stage`` directory, not just this
-    run's staged paths: a replay that crashed mid-stage leaves orphan
-    batch directories no later run ever references (batch packing can
-    differ across restarts, so the next replay's ids need not cover
-    the old ones), and the replay protocol runs at most once per
-    lineage — by the time a restamp/rebuild clears the stage, nothing
-    under it is live."""
-    import shutil
-
-    shutil.rmtree(os.path.join(root, "_replay_stage"), ignore_errors=True)
-    run.staged = []
+        shutil.rmtree(os.path.join(root, "_replay_stage"), ignore_errors=True)
+        self.staged = []
 
 
 def _batch_fingerprint(batch_df: DataFrame) -> tuple[int, int]:
@@ -261,6 +311,46 @@ def _batch_fingerprint(batch_df: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["x"])
 
 
+#: Where the sinks kept their batch stamps before the stamp moved into
+#: the snapshot commit: a column on every row of the table, or a member
+#: of the catalog. Read only to refuse such state.
+_LEGACY_STAMP_COLUMN = "_last_batch_id"
+_LEGACY_STAMP_MEMBER = "commit_meta"
+
+
+def _refuse_legacy_stamps(root: str, catalog: bool = False) -> None:
+    """Raise ``ValueError`` if ``root`` holds state written by a sink
+    that kept its exactly-once stamp in the data (a row column, or a
+    catalog member) instead of the snapshot commit. Such state has no
+    stamp file, so the current code would read it as never stamped and
+    fold on top of it — double counting a redelivery, and keeping the
+    old stamp columns as data. It is refused, not upgraded. Driver-side:
+    reads the stamp file, and only when that is missing the manifest or
+    one parquet footer; never a Spark job."""
+    v = current_version(root)
+    if v is None or read_stamp(root, v) is not None:
+        return
+    if catalog:
+        legacy = _LEGACY_STAMP_MEMBER in read_catalog_manifest(root, v)
+        where = f"a {_LEGACY_STAMP_MEMBER!r} catalog member"
+    else:
+        import pyarrow.parquet as pq
+
+        vdir = os.path.join(root, v)
+        parts = sorted(f for f in os.listdir(vdir) if f.endswith(".parquet"))
+        legacy = bool(parts) and _LEGACY_STAMP_COLUMN in (
+            pq.read_schema(os.path.join(vdir, parts[0])).names
+        )
+        where = f"a {_LEGACY_STAMP_COLUMN!r} column on every row"
+    if legacy:
+        raise ValueError(
+            f"{root} uses the old stream-sink layout that keeps batch stamps "
+            f"in the data ({where}); stamps now live in the snapshot commit "
+            "and that layout is not read. Restart with a fresh table and "
+            "checkpoint."
+        )
+
+
 def stream_agg_maintain_to_parquet(
     stream_df: DataFrame,
     path: str,
@@ -279,15 +369,15 @@ def stream_agg_maintain_to_parquet(
     NO Spark aggregation state is held: the accumulated truth lives in
     the snapshot table, so the aggregate survives checkpoint loss and
     is readable (atomically, any version) by any outside consumer
-    mid-stream.
+    mid-stream. The table holds only the group, count and sum columns.
 
     Exactly-once on top of foreachBatch's at-least-once, in BOTH replay
     regimes (batch ids are only comparable within one continuous
     checkpoint lineage, so the id alone cannot carry the guarantee):
 
     - continuous checkpoint, in-flight batch re-delivered after a
-      crash: its id equals the committed ``_last_batch_id`` and its
-      content fingerprint matches the stamped one → skip.
+      crash: its id equals the committed stamp's id and its content
+      fingerprint matches the stamped one → skip.
     - checkpoint lost/reset (ids restart at 0, the whole source is
       re-delivered): the sink stages the re-run's batches and skips
       until the cumulative content fingerprint EQUALS the committed
@@ -303,111 +393,43 @@ def stream_agg_maintain_to_parquet(
       content) raises instead of guessing. See ``_ReplayGuard``.
 
     Fingerprints are order-independent (count + XOR of row hashes,
-    ``_batch_fingerprint``) and ride on the snapshot rows, so they
-    commit atomically with the data they describe. Tables written
-    before the content stamps existed (missing ``_content_fp_*``
-    columns) still read; on lineage restart they rebuild rather than
-    prefix-verify.
+    ``_batch_fingerprint``) and are the snapshot commit's stamp
+    (``snapshots.read_stamp``), so they publish atomically with the
+    data they describe. A table written by the older row-stamped layout
+    is refused with a ``ValueError``.
     """
     from neulix_datahub_spark.operators.incremental import apply_agg_delta
 
     spark = stream_df.sparkSession
-
-    def _empty_agg(batch_df: DataFrame) -> DataFrame:
-        return (
-            batch_df.limit(0)
-            .groupBy(*group_cols)
-            .agg(
-                F.count(F.lit(1)).cast("long").alias(count_col),
-                *[F.sum(src).cast("double").alias(out) for out, src in sum_map.items()],
-            )
-        )
-
-    _STAMPS = ("_last_batch_id", "_last_batch_fp_n", "_last_batch_fp_x",
-               "_content_fp_n", "_content_fp_x")
-    _META_KEYS = {"_last_batch_id": "id", "_last_batch_fp_n": "n",
-                  "_last_batch_fp_x": "x", "_content_fp_n": "cn",
-                  "_content_fp_x": "cx"}
     # per-run replay tracker (foreachBatch calls arrive sequentially)
     run = _ReplayGuard()
 
-    def _stamp(df: DataFrame, batch_id: int, fp_n: int, fp_x: int,
-               content_n: int, content_x: int) -> DataFrame:
-        return (
-            df.withColumn("_last_batch_id", F.lit(batch_id))
-            .withColumn("_last_batch_fp_n", F.lit(fp_n))
-            .withColumn("_last_batch_fp_x", F.lit(fp_x))
-            .withColumn("_content_fp_n", F.lit(content_n))
-            .withColumn("_content_fp_x", F.lit(content_x))
+    def _fold(feed: DataFrame, incremental: bool, stamp: dict) -> None:
+        base = read_upsert_table(spark, path) if incremental else None
+        if base is None:
+            base = (
+                feed.limit(0)
+                .groupBy(*group_cols)
+                .agg(
+                    F.count(F.lit(1)).cast("long").alias(count_col),
+                    *[F.sum(src).cast("double").alias(out)
+                      for out, src in sum_map.items()],
+                )
+            )
+        updated = apply_agg_delta(
+            base, feed.withColumn("_change_type", F.lit("insert")),
+            group_cols, count_col, sum_map,
         )
+        _publish(updated, path, stamp, retain_versions)
 
-    def _publish(df: DataFrame) -> None:
-        write_snapshot(df, path)
-        if retain_versions is not None:
-            vacuum_snapshots(path, keep=retain_versions)
+    def _restamp(stamp: dict) -> None:
+        _publish(read_snapshot_table(spark, path), path, stamp, retain_versions)
 
     def _maintain(batch_df: DataFrame, batch_id: int) -> None:
-        existing = read_upsert_table(spark, path)
-        meta = None
-        if existing is not None:
-            # stamp columns may be missing on tables written by older
-            # versions — aggregate only what is present
-            present = [c for c in _STAMPS if c in existing.columns]
-            row = (
-                existing.agg(*[F.max(c).alias(c) for c in present]).first()
-                if present
-                else {}
-            )
-            meta = {v: (row[c] if c in present else None)
-                    for c, v in _META_KEYS.items()}
-            existing = existing.drop(*_STAMPS)
-        fp_n, fp_x = _batch_fingerprint(batch_df)
-        action = run.decide(batch_id, fp_n, fp_x, meta)
-        if action == "skip":
-            return
-        if action == "stage":
-            _stage_batch(run, path, batch_df, batch_id)
-            return
-        if action == "restamp":
-            # content unchanged; re-align the stamp with the restarted
-            # lineage so its ids are authoritative from here on
-            _publish(_stamp(existing, batch_id, fp_n, fp_x,
-                            meta["cn"], meta["cx"]))
-            _clear_staged(run, path)
-            return
-        if action == "rebuild":
-            staged = _read_staged(spark, run)
-            feed_src = (
-                batch_df if staged is None else staged.unionByName(batch_df)
-            )
-            feed = feed_src.withColumn("_change_type", F.lit("insert"))
-            updated = apply_agg_delta(
-                _empty_agg(batch_df), feed, group_cols, count_col, sum_map
-            )
-            _publish(_stamp(updated, batch_id, fp_n, fp_x,
-                            run.cum_n, run.cum_x))
-            _clear_staged(run, path)
-            return
-        # fold
-        if existing is None:
-            existing = _empty_agg(batch_df)
-        feed = batch_df.withColumn("_change_type", F.lit("insert"))
-        updated = apply_agg_delta(existing, feed, group_cols, count_col, sum_map)
-        prev_cn = meta["cn"] if meta is not None and meta["cn"] is not None else 0
-        prev_cx = meta["cx"] if meta is not None and meta["cx"] is not None else 0
-        _publish(_stamp(updated, batch_id, fp_n, fp_x,
-                        prev_cn + fp_n, prev_cx ^ fp_x))
+        run.deliver(path, batch_df, batch_id, read_stamp(path), _fold, _restamp)
 
-    writer = stream_df.writeStream.foreachBatch(_maintain).trigger(availableNow=True)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
-
-
-#: Reserved member name carrying the last committed batch id inside a
-#: stream-maintained catalog (exactly-once bookkeeping, committed in the
-#: SAME atomic manifest as the data members).
-STREAM_META_TABLE = "commit_meta"
+    _refuse_legacy_stamps(path)
+    return _start(stream_df, _maintain, checkpoint_dir)
 
 
 def stream_commit_tables(
@@ -427,19 +449,23 @@ def stream_commit_tables(
     ``members`` maps table name -> ``fn(batch_df, existing_df_or_None)
     -> full new DataFrame`` (existing is the member at the catalog's
     current commit; None before the first). Exactly-once rides the same
-    commit: the reserved ``commit_meta`` member records the batch id
-    AND content fingerprints ATOMICALLY WITH the data, so there is no
+    commit: the batch id AND content fingerprints are the catalog
+    commit's stamp (``snapshots.read_stamp`` on ``catalog_root``),
+    published by the same pointer move as the manifest, so there is no
     state in which the data committed but the bookkeeping didn't. Both
     replay regimes are covered (see stream_agg_maintain_to_parquet):
     an in-flight batch re-delivered under a continuous checkpoint skips
     by (id, fingerprint); a fresh checkpoint over a possibly-advanced
     source stages the re-delivered prefix, verifies it by cumulative
     fingerprint, RE-STAMPS the catalog with the restarted batch id once
-    the prefix matches, folds the new tail — and on mismatched batch
-    BOUNDARIES (a batch straddling committed and new rows) rebuilds
-    every member from the staged re-delivered rows instead of raising.
-    Provable divergence (same cumulative count, different content)
-    still raises. Full protocol: ``_ReplayGuard``.
+    the prefix matches (a stamp-only commit; members carry forward),
+    folds the new tail — and on mismatched batch BOUNDARIES (a batch
+    straddling committed and new rows) rebuilds every member from the
+    staged re-delivered rows instead of raising. Provable divergence
+    (same cumulative count, different content) still raises. Full
+    protocol: ``_ReplayGuard``. A catalog written by the older layout,
+    which kept the stamp in a reserved member table, is refused with a
+    ``ValueError``.
 
     Works with incremental member functions (e.g. an
     operators/incremental.py delta fold) so per-batch cost tracks batch
@@ -449,96 +475,67 @@ def stream_commit_tables(
     one (true for every member this module ships). Trigger is
     AvailableNow (bounded drain); long-lived deployments drop it.
     """
-    from neulix_datahub_spark.sources.snapshots import (
-        commit_tables,
-        read_catalog_manifest,
-    )
-
-    if STREAM_META_TABLE in members:
-        raise ValueError(f"{STREAM_META_TABLE!r} is reserved")
     spark = stream_df.sparkSession
     run = _ReplayGuard()
-    _META_SCHEMA = (
-        "last_batch_id bigint, last_fp_n bigint, last_fp_x bigint, "
-        "content_n bigint, content_x bigint"
-    )
 
-    def _commit(batch_df: DataFrame, batch_id: int) -> None:
-        try:
-            manifest = read_catalog_manifest(catalog_root)
-        except FileNotFoundError:
-            manifest = {}
-        meta = None
-        if STREAM_META_TABLE in manifest:
-            raw = read_snapshot_table(
-                spark,
-                os.path.join(catalog_root, STREAM_META_TABLE),
-                manifest[STREAM_META_TABLE],
-            ).first().asDict()
-            # .get everywhere: meta tables written by older versions may
-            # lack the content-fingerprint columns
-            meta = {
-                "id": raw.get("last_batch_id"),
-                "n": raw.get("last_fp_n"),
-                "x": raw.get("last_fp_x"),
-                "cn": raw.get("content_n"),
-                "cx": raw.get("content_x"),
-            }
-        fp_n, fp_x = _batch_fingerprint(batch_df)
-        action = run.decide(batch_id, fp_n, fp_x, meta)
-        if action == "skip":
-            return
-        if action == "stage":
-            _stage_batch(run, catalog_root, batch_df, batch_id)
-            return
-        if action == "restamp":
-            # one-member commit: data members carry their manifest
-            # versions forward; only the stamp moves to the new lineage
-            commit_tables(
-                {
-                    STREAM_META_TABLE: _local_relation(
-                        spark,
-                        [(batch_id, fp_n, fp_x, meta["cn"], meta["cx"])],
-                        _META_SCHEMA,
-                    )
-                },
-                catalog_root,
-            )
-            _clear_staged(run, catalog_root)
-            return
-        if action == "rebuild":
-            staged = _read_staged(spark, run)
-            feed = batch_df if staged is None else staged.unionByName(batch_df)
-            updates = {name: fn(feed, None) for name, fn in members.items()}
-            updates[STREAM_META_TABLE] = _local_relation(
-                spark, [(batch_id, fp_n, fp_x, run.cum_n, run.cum_x)], _META_SCHEMA
-            )
-            commit_tables(updates, catalog_root)
-            _clear_staged(run, catalog_root)
-            return
-        updates = {}
-        for name, fn in members.items():
-            existing = (
+    def _fold(feed: DataFrame, incremental: bool, stamp: dict) -> None:
+        v = current_version(catalog_root)
+        manifest = read_catalog_manifest(catalog_root, v) if incremental and v else {}
+        updates = {
+            name: fn(
+                feed,
                 read_snapshot_table(
                     spark, os.path.join(catalog_root, name), manifest[name]
-                )
-                if name in manifest
-                else None
+                ) if name in manifest else None,
             )
-            updates[name] = fn(batch_df, existing)
-        prev_cn = meta.get("cn") if meta else 0
-        prev_cx = meta.get("cx") if meta else 0
-        updates[STREAM_META_TABLE] = _local_relation(
-            spark,
-            [(batch_id, fp_n, fp_x, (prev_cn or 0) + fp_n, (prev_cx or 0) ^ fp_x)],
-            _META_SCHEMA,
-        )
-        commit_tables(updates, catalog_root)
+            for name, fn in members.items()
+        }
+        commit_tables(updates, catalog_root, expected=v, stamp=stamp)
 
-    writer = stream_df.writeStream.foreachBatch(_commit).trigger(availableNow=True)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    def _restamp(stamp: dict) -> None:
+        commit_tables({}, catalog_root, stamp=stamp)
+
+    def _commit(batch_df: DataFrame, batch_id: int) -> None:
+        run.deliver(
+            catalog_root, batch_df, batch_id, read_stamp(catalog_root),
+            _fold, _restamp,
+        )
+
+    _refuse_legacy_stamps(catalog_root, catalog=True)
+    return _start(stream_df, _commit, checkpoint_dir)
+
+
+def _repair_newest(
+    spark: SparkSession,
+    data_dir: str,
+    store_dir: str,
+    store: DataFrame | None,
+    stamp: dict | None,
+    missing_rows,
+    retain_versions: int | None,
+) -> DataFrame | None:
+    """Crash repair shared by the dedup sinks, run once per query
+    lifetime: fold into the store the rows of the newest committed data
+    directory that a crash between its data write and its store publish
+    left out. Without this, a checkpoint loss + REPACKED redelivery
+    admits those docs again under a different (id, fingerprint)
+    directory name — a permanent duplicate the content-addressed
+    overwrite guard cannot see (same-packing redelivery it handles).
+    Only the newest directory can be uncovered (see
+    ``_newest_committed_dir``), so the repair reads ONE batch directory
+    per stream restart. ``missing_rows(docs, store)`` gives the store
+    rows for the directory's docs that the store lacks; the repaired
+    store republishes under the existing stamp, so replay
+    classification is unchanged. Returns the store to use."""
+    newest = _newest_committed_dir(data_dir)
+    if newest is None or not _has_parquet_parts(newest):
+        return store
+    missing = missing_rows(spark.read.parquet(newest), store)
+    if missing.isEmpty():
+        return store
+    repaired = missing if store is None else store.unionByName(missing)
+    _publish(repaired, store_dir, stamp, retain_versions)
+    return repaired
 
 
 def stream_dedup_to_parquet(
@@ -572,9 +569,11 @@ def stream_dedup_to_parquet(
 
     Crash safety (see ``_admit_and_publish``): admitted docs land in a
     per-batch directory named by (batch id, content fingerprint) and
-    written with OVERWRITE, and the store snapshot carries the batch
-    stamp — every crash point replays idempotently. Read the corpus
-    back with :func:`read_stream_corpus`.
+    written with OVERWRITE, and the store's snapshot commit carries the
+    batch stamp — every crash point replays idempotently. A store
+    written by the older row-stamped layout is refused with a
+    ``ValueError``. Read the corpus back with
+    :func:`read_stream_corpus`.
     """
     from neulix_datahub_spark.operators.dedupe import (
         content_fingerprint,
@@ -586,50 +585,20 @@ def stream_dedup_to_parquet(
     data_dir = os.path.join(path, "data")
     run_state = {"reconciled": False}
 
-    def _reconcile(seen, meta):
-        """Once per query lifetime: fold the newest committed data
-        directory's fingerprints into the store if a crash between its
-        data write and store publish left them out. Without this, a
-        checkpoint loss + REPACKED redelivery admits those docs again
-        under a different (id, fingerprint) directory name — a
-        permanent duplicate the content-addressed overwrite guard
-        cannot see (same-packing redelivery it handles). Only the
-        newest directory can be uncovered (see _newest_committed_dir),
-        so the repair reads ONE batch directory per stream restart."""
-        newest = _newest_committed_dir(data_dir)
-        if newest is None or not _has_parquet_parts(newest):
-            return seen
-        fps = (
-            spark.read.parquet(newest)
-            .select(content_fingerprint(text_col).alias("fingerprint"))
-            .distinct()
-        )
-        missing = fps if seen is None else fps.join(seen, "fingerprint", "left_anti")
-        if missing.isEmpty():
-            return seen
-        repaired = missing if seen is None else seen.unionByName(missing)
-        # preserve the existing stamp so replay classification is
-        # unchanged; a store that never published stamps gets a
-        # sentinel no real batch id (>= 0) can ever match
-        stamp = {"_last_batch_id": -1, "_last_batch_fp_n": 0,
-                 "_last_batch_fp_x": 0}
-        if meta:
-            stamp.update({k: v for k, v in meta.items() if v is not None})
-        out = repaired
-        for c in _DEDUP_STAMPS:
-            out = out.withColumn(c, F.lit(stamp[c]))
-        write_snapshot(out, fp_dir)
-        if retain_versions is not None:
-            vacuum_snapshots(fp_dir, keep=retain_versions)
-        return repaired
+    def _missing_fps(docs: DataFrame, seen: DataFrame | None) -> DataFrame:
+        fps = docs.select(content_fingerprint(text_col).alias("fingerprint")).distinct()
+        return fps if seen is None else fps.join(seen, "fingerprint", "left_anti")
 
     def _dedup_batch(batch_df: DataFrame, batch_id: int) -> None:
         fp_n, fp_x = _batch_fingerprint(batch_df.select(id_col, text_col))
-        seen, meta = _read_stamped(spark, fp_dir)
+        stamp = read_stamp(fp_dir)
+        seen = read_upsert_table(spark, fp_dir)
         if not run_state["reconciled"]:
             run_state["reconciled"] = True
-            seen = _reconcile(seen, meta)
-        if _batch_committed(meta, batch_id, fp_n, fp_x):
+            seen = _repair_newest(
+                spark, data_dir, fp_dir, seen, stamp, _missing_fps, retain_versions
+            )
+        if _batch_committed(stamp, batch_id, fp_n, fp_x):
             return  # replay of a fully-committed batch
         batch = exact_dedup(batch_df, text_col, id_col).withColumn(
             "__fp", content_fingerprint(text_col)
@@ -647,15 +616,9 @@ def stream_dedup_to_parquet(
             batch_id, fp_n, fp_x, retain_versions,
         )
 
-    writer = stream_df.writeStream.foreachBatch(_dedup_batch).trigger(availableNow=True)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    _refuse_legacy_stamps(fp_dir)
+    return _start(stream_df, _dedup_batch, checkpoint_dir)
 
-
-#: Stamp columns riding on dedup index/store snapshots — constant per
-#: snapshot version, committed atomically with the content they admit.
-_DEDUP_STAMPS = ("_last_batch_id", "_last_batch_fp_n", "_last_batch_fp_x")
 
 #: Per-batch data-directory commit marker, written by the sink itself
 #: after the parquet job returns (independent of Hadoop's _SUCCESS
@@ -671,8 +634,8 @@ def _newest_committed_dir(data_dir: str) -> str | None:
     before the next batch's data write begins, so AT MOST ONE committed
     directory — the newest — can be missing from the store (a crash
     landed between its data write and its store publish). That makes
-    newest-only reconciliation (see the sinks' ``_reconcile`` steps)
-    sufficient: every older directory is covered by the store."""
+    newest-only reconciliation (``_repair_newest``) sufficient: every
+    older directory is covered by the store."""
     try:
         names = os.listdir(data_dir)
     except FileNotFoundError:
@@ -708,35 +671,6 @@ def read_stream_corpus(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def _read_stamped(
-    spark: SparkSession, store_dir: str
-) -> tuple[DataFrame | None, dict | None]:
-    """Current store snapshot with its batch stamp split off (stamp
-    columns dropped from the returned frame; absent on pre-stamp
-    stores → meta None)."""
-    store = read_upsert_table(spark, store_dir)
-    if store is None:
-        return None, None
-    present = [c for c in _DEDUP_STAMPS if c in store.columns]
-    meta = None
-    if present:
-        row = store.agg(*[F.max(c).alias(c) for c in present]).first()
-        meta = {c: row[c] for c in present}
-        store = store.drop(*present)
-    return store, meta
-
-
-def _batch_committed(
-    meta: dict | None, batch_id: int, fp_n: int, fp_x: int
-) -> bool:
-    return (
-        meta is not None
-        and meta.get("_last_batch_id") == batch_id
-        and meta.get("_last_batch_fp_n") == fp_n
-        and meta.get("_last_batch_fp_x") == fp_x
-    )
-
-
 def _admit_and_publish(
     admitted: DataFrame,
     new_store: DataFrame,
@@ -753,8 +687,9 @@ def _admit_and_publish(
     admitted set (the store is unchanged until step 2) and rewrites the
     same directory, and a restarted lineage whose colliding id carries
     different content lands in a DIFFERENT directory instead of
-    clobbering; (2) the grown store publishes with the batch stamp, so
-    a replay after full commit short-circuits via ``_batch_committed``.
+    clobbering; (2) the grown store publishes with the batch stamp
+    ``{id, n, x}`` in its snapshot commit, so a replay after full
+    commit short-circuits via ``_batch_committed``.
     The previous spelling appended to a flat ``data/`` dir before the
     store publish — a crash between the two duplicated the batch's
     documents on replay.
@@ -792,14 +727,10 @@ def _admit_and_publish(
     if not (os.path.exists(marker) or os.path.exists(os.path.join(sub, "_SUCCESS"))):
         admitted.write.mode("overwrite").parquet(sub)
         open(marker, "w").close()
-    stamped = (
-        new_store.withColumn("_last_batch_id", F.lit(batch_id))
-        .withColumn("_last_batch_fp_n", F.lit(fp_n))
-        .withColumn("_last_batch_fp_x", F.lit(fp_x))
+    _publish(
+        new_store, store_dir, {"id": batch_id, "n": fp_n, "x": fp_x},
+        retain_versions,
     )
-    write_snapshot(stamped, store_dir)
-    if retain_versions is not None:
-        vacuum_snapshots(store_dir, keep=retain_versions)
 
 
 def stream_to_partitioned_parquet(
@@ -898,13 +829,7 @@ def stream_json_quarantine(
             batch_df, batch_id, json_col, schema, good_path, quarantine_path
         )
 
-    return (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(split)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream_df, split, checkpoint_dir, output_mode="append")
 
 
 def stream_neardup_dedup_to_parquet(
@@ -937,8 +862,10 @@ def stream_neardup_dedup_to_parquet(
     (5) commit admitted docs + the grown band index via the idempotent
     two-step (``_admit_and_publish``): per-batch admitted directory
     written with overwrite, then the index snapshot published with the
-    batch stamp — a crash at any point replays without duplicating or
-    dropping documents. Read the corpus with :func:`read_stream_corpus`.
+    batch stamp in its commit — a crash at any point replays without
+    duplicating or dropping documents. An index written by the older
+    row-stamped layout is refused with a ``ValueError``. Read the
+    corpus with :func:`read_stream_corpus`.
 
     Scale: the index holds bands·1 rows + one shingle array per
     admitted doc. The shingle store is the honest cost of EXACT
@@ -980,46 +907,25 @@ def stream_neardup_dedup_to_parquet(
 
     run_state = {"reconciled": False}
 
-    def _reconcile(index, meta):
-        """Once per query lifetime: re-band the newest committed data
-        directory's docs into the index if a crash between its data
-        write and index publish left them out — otherwise a checkpoint
-        loss + repacked redelivery re-admits them under a new directory
-        name, duplicating the corpus (exact-sink twin: see
-        stream_dedup_to_parquet._reconcile)."""
-        newest = _newest_committed_dir(data_dir)
-        if newest is None or not _has_parquet_parts(newest):
-            return index
-        docs = spark.read.parquet(newest).select(id_col, text_col)
-        missing = (
-            docs if index is None
-            else docs.join(index.select(id_col).distinct(), id_col, "left_anti")
-        )
-        if missing.isEmpty():
-            return index
-        rows = _banded(missing).select(
+    def _missing_rows(docs: DataFrame, index: DataFrame | None) -> DataFrame:
+        docs = docs.select(id_col, text_col)
+        if index is not None:
+            docs = docs.join(index.select(id_col).distinct(), id_col, "left_anti")
+        return _banded(docs).select(
             id_col, "band", "bh", F.col("__sh").alias("shingles")
         )
-        repaired = rows if index is None else index.unionByName(rows)
-        stamp = {"_last_batch_id": -1, "_last_batch_fp_n": 0,
-                 "_last_batch_fp_x": 0}
-        if meta:
-            stamp.update({k: v for k, v in meta.items() if v is not None})
-        out = repaired
-        for c in _DEDUP_STAMPS:
-            out = out.withColumn(c, F.lit(stamp[c]))
-        write_snapshot(out, idx_dir)
-        if retain_versions is not None:
-            vacuum_snapshots(idx_dir, keep=retain_versions)
-        return repaired
 
     def _dedup_batch(batch_df: DataFrame, batch_id: int) -> None:
         fp_n, fp_x = _batch_fingerprint(batch_df.select(id_col, text_col))
-        index, meta = _read_stamped(spark, idx_dir)
+        stamp = read_stamp(idx_dir)
+        index = read_upsert_table(spark, idx_dir)
         if not run_state["reconciled"]:
             run_state["reconciled"] = True
-            index = _reconcile(index, meta)
-        if _batch_committed(meta, batch_id, fp_n, fp_x):
+            index = _repair_newest(
+                spark, data_dir, idx_dir, index, stamp, _missing_rows,
+                retain_versions,
+            )
+        if _batch_committed(stamp, batch_id, fp_n, fp_x):
             return  # replay of a fully-committed batch
         batch = _banded(batch_df).localCheckpoint()
 
@@ -1082,10 +988,8 @@ def stream_neardup_dedup_to_parquet(
             batch_id, fp_n, fp_x, retain_versions,
         )
 
-    writer = stream_df.writeStream.foreachBatch(_dedup_batch).trigger(availableNow=True)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    _refuse_legacy_stamps(idx_dir)
+    return _start(stream_df, _dedup_batch, checkpoint_dir)
 
 
 def stream_dedup_index_ingest(
@@ -1120,10 +1024,7 @@ def stream_dedup_index_ingest(
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
         ingest_dedup_delta(spark, batch_df, index_path)
 
-    writer = stream_df.writeStream.foreachBatch(_ingest).trigger(availableNow=True)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _start(stream_df, _ingest, checkpoint_dir)
 
 
 def stream_semantic_index_ingest(
@@ -1165,10 +1066,7 @@ def stream_semantic_index_ingest(
             index_path,
         )
 
-    writer = stream_df.writeStream.foreachBatch(_ingest).trigger(availableNow=True)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _start(stream_df, _ingest, checkpoint_dir)
 
 
 def stream_passage_index_ingest(
@@ -1198,10 +1096,7 @@ def stream_passage_index_ingest(
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
         ingest_passage_delta(spark, batch_df, index_path)
 
-    writer = stream_df.writeStream.foreachBatch(_ingest).trigger(availableNow=True)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _start(stream_df, _ingest, checkpoint_dir)
 
 
 def stream_ivfpq_index_ingest(
@@ -1230,10 +1125,7 @@ def stream_ivfpq_index_ingest(
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
         ingest_ivfpq_delta(spark, batch_df, index_path)
 
-    writer = stream_df.writeStream.foreachBatch(_ingest).trigger(availableNow=True)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _start(stream_df, _ingest, checkpoint_dir)
 
 
 def stream_text_ivfpq_ingest(
@@ -1276,12 +1168,7 @@ def stream_text_ivfpq_ingest(
         )
         ingest_ivfpq_delta(spark, emb, index_path)
 
-    writer = stream_df.writeStream.foreachBatch(_ingest).trigger(
-        availableNow=True
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _start(stream_df, _ingest, checkpoint_dir)
 
 
 def stream_search_index_ingest(
@@ -1313,12 +1200,7 @@ def stream_search_index_ingest(
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
         ingest_search_delta(spark, batch_df, index_path)
 
-    writer = stream_df.writeStream.foreachBatch(_ingest).trigger(
-        availableNow=True
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _start(stream_df, _ingest, checkpoint_dir)
 
 
 def stream_classifier_refresh(
@@ -1365,9 +1247,4 @@ def stream_classifier_refresh(
             extra_update={"last_batch_id": batch_id},
         )
 
-    writer = stream_df.writeStream.foreachBatch(_refresh).trigger(
-        availableNow=True
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _start(stream_df, _refresh, checkpoint_dir)

@@ -720,8 +720,8 @@ def test_cosine_pairs_arrow_tier_parity(spark):
     pair set, on adversarial vectors (near-threshold values, zero
     vectors -> NaN cosines, negative components), plus the fallback
     conditions — unknown pair ids drop like the inner joins, a ragged,
-    null-bearing or duplicate-id vector relation routes to the join
-    form."""
+    null-bearing, duplicate-id or over-the-byte-gate vector relation
+    routes to the join form."""
     import random
 
     from neulix_datahub_spark.operators.semantic_index import (
@@ -804,3 +804,17 @@ def test_cosine_pairs_arrow_tier_parity(spark):
         assert "MapInArrow" not in out._jdf.queryExecution().analyzed().toString()
     finally:
         spark.conf.unset("spark.neulix.semantic.driverMaxVectors")
+
+    # the gate is in bytes (rows x dim, in 64-dim equivalents): 42
+    # dim-128 vectors fit a 60-row gate by count but not by size
+    # (42 x 128 > 60 x 64), so they take the join form, with the same
+    # results the Arrow tier gives under a larger gate
+    wide = spark.createDataFrame(
+        [(i, [rng.uniform(-1, 1) for _ in range(128)]) for i in range(42)],
+        "id long, vec array<double>",
+    )
+    (wide_join, used_arrow), (wide_arrow, used_arrow_big) = (
+        run(60, wide), run(10_000, wide)
+    )
+    assert not used_arrow and used_arrow_big
+    assert wide_join == wide_arrow and len(wide_join) == 42 * 41 // 2

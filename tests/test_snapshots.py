@@ -1041,3 +1041,52 @@ def test_time_travel_survives_mixed_era_and_torn_publish(spark, tmp_path):
     assert version_at(root, t0 + 60) == "v00000005"
     hist = {h["version"]: h for h in snapshot_history(root)}
     assert "v00000005" in hist and hist["v00000005"]["is_current"]
+
+
+def test_stamp_commits_with_its_version(spark, tmp_path, monkeypatch):
+    """A writer stamp lives in the version dir, not in the data: it is
+    invisible to readers, time-travels with its version, survives a
+    stamp-only catalog commit, is left at the old version by a publish
+    that fails after the rename, and an unknown layout is refused."""
+    import json
+    import os
+
+    from neulix_datahub_spark.sources import snapshots
+    from neulix_datahub_spark.sources.snapshots import (
+        commit_tables,
+        read_catalog,
+        read_catalog_manifest,
+        read_stamp,
+    )
+
+    root = str(tmp_path / "tbl")
+    assert read_stamp(root) is None
+    df = spark.createDataFrame([(1, "a")], "id long, v string")
+    v1 = write_snapshot(df, root, stamp={"id": 0, "n": 1, "x": -5})
+    v2 = write_snapshot(df, root)
+    assert read_snapshot_table(spark, root).columns == ["id", "v"]
+    assert read_stamp(root, v1) == {"id": 0, "n": 1, "x": -5}
+    assert read_stamp(root) is None  # v2 carries none
+
+    # the pointer CAS fails after the rename: old data, old stamp
+    def lost(*_a, **_k):
+        raise OSError("crash before the pointer moved")
+
+    monkeypatch.setattr(snapshots, "_publish_pointer", lost)
+    with pytest.raises(OSError):
+        write_snapshot(df, root, stamp={"id": 1, "n": 1, "x": 0})
+    monkeypatch.undo()
+    assert current_version(root) == v2 and read_stamp(root) is None
+
+    # catalog: the stamp sits beside the manifest; {} restamps only
+    cat = str(tmp_path / "cat")
+    c1 = commit_tables({"t": df}, cat, stamp={"id": 3})
+    c2 = commit_tables({}, cat, stamp={"id": 4})
+    assert read_catalog_manifest(cat, c1) == read_catalog_manifest(cat, c2)
+    assert (read_stamp(cat, c1), read_stamp(cat)) == ({"id": 3}, {"id": 4})
+    assert _rows(read_catalog(spark, cat)["t"]) == [(1, "a")]
+
+    with open(os.path.join(root, v1, snapshots.STAMP), "w") as f:
+        json.dump({"layout": "stamp/99", "id": 0}, f)
+    with pytest.raises(ValueError, match="stamp/99"):
+        read_stamp(root, v1)

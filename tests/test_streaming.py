@@ -654,8 +654,8 @@ def test_stream_json_quarantine_splits_good_and_bad(spark, tmp_path):
 
 
 def test_stream_agg_maintain_replay_cannot_double_count(spark, tmp_path):
-    """The _last_batch_id stamp makes the delta-fold sink exactly-once:
-    a full replay of the source (fresh checkpoint, same batch ids)
+    """The batch stamp in the snapshot commit makes the delta-fold sink
+    exactly-once: a full replay of the source (fresh checkpoint, same batch ids)
     skips every already-committed batch, so the aggregate neither
     double-counts nor drifts — and it equals the batch groupBy."""
     from neulix_datahub_spark.streaming.sinks import (
@@ -895,17 +895,18 @@ def test_stream_agg_maintain_rebuilds_on_straddling_batch_boundaries(
 def test_stream_agg_maintain_reads_tables_without_content_stamps(
     spark, tmp_path
 ):
-    """Forward-compat guard: an aggregate table written before the
-    content-fingerprint stamps existed (only _last_batch_id/_fp_*)
-    must still load — the stamp aggregate reads only present columns —
-    and new batches fold on top of it."""
+    """An aggregate table written by the older row-stamped layout (stamp
+    columns on every row, no stamp file in the snapshot commit) is
+    refused loudly when the sink starts — not rebuilt, and not folded
+    on as if it had never been stamped — and it is left untouched."""
+    import pytest
     from pyspark.sql import functions as F
 
-    from neulix_datahub_spark.sources.snapshots import write_snapshot
-    from neulix_datahub_spark.streaming.sinks import (
-        read_upsert_table,
-        stream_agg_maintain_to_parquet,
+    from neulix_datahub_spark.sources.snapshots import (
+        current_version,
+        write_snapshot,
     )
+    from neulix_datahub_spark.streaming.sinks import stream_agg_maintain_to_parquet
 
     path = str(tmp_path / "agg")
     legacy = spark.createDataFrame(
@@ -916,7 +917,7 @@ def test_stream_agg_maintain_reads_tables_without_content_stamps(
         F.lit(1).alias("_last_batch_fp_n"),
         F.lit(42).alias("_last_batch_fp_x"),
     )
-    write_snapshot(legacy, path)
+    v = write_snapshot(legacy, path)
 
     src = tmp_path / "src"
     src.mkdir()
@@ -925,18 +926,205 @@ def test_stream_agg_maintain_reads_tables_without_content_stamps(
         spark.readStream.schema("event_type string, value double")
         .parquet(str(src))
     )
-    # a fresh checkpoint restarts ids at 0 == legacy stamp id, and the
-    # legacy table has no content fingerprint to verify a prefix
-    # against -> the sink rebuilds from the re-delivered source
+    with pytest.raises(ValueError, match="fresh table and checkpoint"):
+        stream_agg_maintain_to_parquet(
+            stream, path, group_cols=["event_type"], count_col="n",
+            sum_map={"s": "value"}, checkpoint_dir=str(tmp_path / "ckpt"),
+        )
+    assert current_version(path) == v
+
+
+def _drain_agg(spark, src, path, ckpt, mfpt=1):
+    from neulix_datahub_spark.streaming.sinks import stream_agg_maintain_to_parquet
+
+    stream = (
+        spark.readStream.schema("event_type string, value double")
+        .option("maxFilesPerTrigger", str(mfpt))
+        .parquet(str(src))
+    )
     q = stream_agg_maintain_to_parquet(
         stream, path, group_cols=["event_type"], count_col="n",
-        sum_map={"s": "value"}, checkpoint_dir=str(tmp_path / "ckpt"),
+        sum_map={"s": "value"}, checkpoint_dir=ckpt,
     )
     q.awaitTermination()
-    got = {
-        r.event_type: (r.n, r.s) for r in read_upsert_table(spark, path).collect()
-    }
-    assert got == {"a": (1, 3.0), "b": (1, 2.0)}
+
+
+def test_stream_agg_maintain_rows_carry_no_stamps(spark, tmp_path):
+    """The batch stamp lives in the snapshot commit, so the table holds
+    only the group, count and sum columns, and the change feed between
+    two versions reports exactly the groups that batch touched."""
+    from neulix_datahub_spark.sources.snapshots import (
+        read_stamp,
+        snapshot_diff,
+        snapshot_versions,
+    )
+    from neulix_datahub_spark.streaming.sinks import read_upsert_table
+
+    src = tmp_path / "src"
+    src.mkdir()
+    _write_src_file(str(src / "f0.parquet"), [("a", 1.0), ("b", 2.0)], 1_000)
+    _write_src_file(str(src / "f1.parquet"), [("a", 3.0)], 2_000)
+    path = str(tmp_path / "agg")
+    _drain_agg(spark, src, path, str(tmp_path / "ckpt"))
+
+    out = read_upsert_table(spark, path)
+    assert sorted(out.columns) == ["event_type", "n", "s"]
+    assert read_stamp(path)["id"] == 1
+    v1, v2 = snapshot_versions(path)
+    feed = snapshot_diff(spark, path, v1, v2, key="event_type").collect()
+    assert [(r.event_type, r.n, r.s, r._change_type) for r in feed] == [
+        ("a", 2, 4.0, "update")
+    ]
+
+
+def test_stream_agg_maintain_lost_pointer_publish_folds_once(
+    spark, tmp_path, monkeypatch
+):
+    """A publish that dies after the version rename but before the
+    pointer moves leaves the data AND the stamp at the old version, so
+    the redelivered batch folds exactly once; a publish that dies right
+    after the pointer moved leaves the new stamp, so the redelivered
+    batch is skipped."""
+    import pytest
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    from neulix_datahub_spark.sources import snapshots
+    from neulix_datahub_spark.sources.snapshots import current_version, read_stamp
+    from neulix_datahub_spark.streaming.sinks import read_upsert_table
+
+    src = tmp_path / "src"
+    src.mkdir()
+    _write_src_file(str(src / "f0.parquet"), [("a", 1.0)], 1_000)
+    path, ckpt = str(tmp_path / "agg"), str(tmp_path / "ckpt")
+    _drain_agg(spark, src, path, ckpt)
+    v0, stamp0 = current_version(path), read_stamp(path)
+
+    def got():
+        return {
+            r.event_type: (r.n, r.s)
+            for r in read_upsert_table(spark, path).collect()
+        }
+
+    real = snapshots._publish_pointer
+
+    def before_pointer(*_a, **_k):
+        raise OSError("crash before the pointer moved")
+
+    def after_pointer(*a, **k):
+        real(*a, **k)
+        raise OSError("crash after the pointer moved")
+
+    _write_src_file(str(src / "f1.parquet"), [("b", 2.0)], 2_000)
+    monkeypatch.setattr(snapshots, "_publish_pointer", before_pointer)
+    with pytest.raises(StreamingQueryException, match="before the pointer"):
+        _drain_agg(spark, src, path, ckpt)
+    assert (current_version(path), read_stamp(path)) == (v0, stamp0)
+    assert got() == {"a": (1, 1.0)}
+
+    monkeypatch.setattr(snapshots, "_publish_pointer", after_pointer)
+    with pytest.raises(StreamingQueryException, match="after the pointer"):
+        _drain_agg(spark, src, path, ckpt)  # batch 1 redelivered, folded
+    assert read_stamp(path)["id"] == 1
+    assert got() == {"a": (1, 1.0), "b": (1, 2.0)}
+
+    monkeypatch.undo()
+    _write_src_file(str(src / "f2.parquet"), [("a", 5.0)], 3_000)
+    _drain_agg(spark, src, path, ckpt)  # batch 1 again: skipped
+    assert got() == {"a": (2, 6.0), "b": (1, 2.0)}
+
+
+def test_stream_commit_tables_stamp_rides_the_catalog_commit(spark, tmp_path):
+    """The catalog sink's manifest lists only the caller's members: the
+    batch stamp is the catalog commit's own stamp, not a member table."""
+    from neulix_datahub_spark.sources.snapshots import (
+        read_catalog_manifest,
+        read_stamp,
+    )
+    from neulix_datahub_spark.streaming.sinks import stream_commit_tables
+
+    src = tmp_path / "src"
+    src.mkdir()
+    _write_src_file(str(src / "f0.parquet"), [("a", 1.0)], 1_000)
+    _write_src_file(str(src / "f1.parquet"), [("b", 2.0)], 2_000)
+    root = str(tmp_path / "cat")
+    stream = (
+        spark.readStream.schema("event_type string, value double")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(str(src))
+    )
+
+    def clean(batch, existing):
+        return batch if existing is None else existing.unionByName(batch)
+
+    stream_commit_tables(
+        stream, root, {"clean": clean}, checkpoint_dir=str(tmp_path / "ckpt")
+    ).awaitTermination()
+    assert set(read_catalog_manifest(root)) == {"clean"}
+    assert read_stamp(root)["id"] == 1 and read_stamp(root)["cn"] == 2
+
+
+def test_stream_sinks_refuse_legacy_stamp_layouts(spark, tmp_path):
+    """Every exactly-once sink refuses state whose stamps live in the
+    data — a catalog with the old ``commit_meta`` member, a dedup store
+    or near-dup index with stamp columns on every row — and a stamp
+    file of an unknown layout."""
+    import json
+    import os
+
+    import pytest
+
+    from neulix_datahub_spark.sources.snapshots import (
+        STAMP,
+        commit_tables,
+        current_version,
+        write_snapshot,
+    )
+    from neulix_datahub_spark.streaming.sinks import (
+        stream_agg_maintain_to_parquet,
+        stream_commit_tables,
+        stream_dedup_to_parquet,
+        stream_neardup_dedup_to_parquet,
+    )
+
+    (tmp_path / "src").mkdir()
+    stream = spark.readStream.schema("doc_id long, text string").parquet(
+        str(tmp_path / "src")
+    )
+    cat = str(tmp_path / "cat")
+    commit_tables(
+        {
+            "counts": spark.createDataFrame([("a", 1)], "event_type string, n long"),
+            "commit_meta": spark.createDataFrame([(0,)], "last_batch_id long"),
+        },
+        cat,
+    )
+    with pytest.raises(ValueError, match="'commit_meta' catalog member"):
+        stream_commit_tables(stream, cat, {"counts": lambda b, e: e})
+
+    row_stamped = spark.createDataFrame(
+        [("f", 0, 1, 7)],
+        "fingerprint string, _last_batch_id long, _last_batch_fp_n long, "
+        "_last_batch_fp_x long",
+    )
+    for store, sink in (
+        ("_fingerprints", stream_dedup_to_parquet),
+        ("_neardup_index", stream_neardup_dedup_to_parquet),
+    ):
+        corpus = str(tmp_path / sink.__name__)
+        write_snapshot(row_stamped, os.path.join(corpus, store))
+        with pytest.raises(ValueError, match="column on every row"):
+            sink(stream, corpus)
+
+    agg = str(tmp_path / "agg")
+    v = write_snapshot(
+        spark.createDataFrame([("a", 1)], "event_type string, n long"),
+        agg, stamp={"id": 0, "n": 1, "x": 0, "cn": 1, "cx": 0},
+    )
+    with open(os.path.join(agg, v, STAMP), "w") as f:
+        json.dump({"layout": "stamp/2", "id": 0}, f)
+    with pytest.raises(ValueError, match="stamp/2"):
+        stream_agg_maintain_to_parquet(stream, agg, ["event_type"], "n", {})
+    assert current_version(agg) == v
 
 
 def test_stream_commit_tables_replay_repack_and_straddle(spark, tmp_path):
