@@ -118,7 +118,10 @@ def connected_components(
     rounds) and logs the switch, so callers don't need to know the
     graph's shape up front; ``star`` exhausting its budget still
     raises (that is ~2^sqrt(max_iter) of chain diameter — a real
-    anomaly, not a shape mismatch).
+    anomaly, not a shape mismatch). The default solves a symmetric edge
+    list of at most ``spark.neulix.cc.driverMaxEdges`` rows by
+    union-find on the driver; an explicit ``algorithm="star"`` always
+    runs the distributed contraction.
     """
     if algorithm not in ("propagation", "star"):
         raise ValueError(f"unknown algorithm {algorithm!r}")
@@ -136,6 +139,8 @@ def connected_components(
     # (Lazy: the size-gate count below is the materializing action — the
     # eager form paid a dedicated pass before the first round started.)
     sym = sym.localCheckpoint(eager=False)
+    if algorithm == "star":  # chosen deliberately: no driver shortcut
+        return _star_components(sym, max_iter)
     # Driver fast path (r14, guide §1.2 "choose the right distributed
     # algorithm" + the bounded-driver-rows precedent of ranked_topk):
     # near-dup pair graphs are usually FAR smaller than the corpus that
@@ -171,8 +176,6 @@ def connected_components(
                 ]
             ),
         )
-    if algorithm == "star":
-        return _star_components(sym, max_iter)
     labels = (
         sym.select(F.col("u").alias("id"))
         .distinct()

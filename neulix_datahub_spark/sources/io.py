@@ -20,11 +20,15 @@ from __future__ import annotations
 
 import os
 import shutil
+import threading
 import time
 import uuid
+import weakref
+from collections import OrderedDict
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 DEFAULT_CANDIDATE_DELIMITERS = (",", ";", "\t")
 
@@ -63,9 +67,98 @@ def warehouse_scratch(
     return path
 
 
+#: Parquet footer schemas per SparkSession (a new session may read
+#: under other Parquet confs): absolute path -> (stat identity, schema),
+#: least recently used first, bounded so a stream that reads a new
+#: snapshot version every micro-batch cannot grow it without limit.
+_SCHEMAS: "weakref.WeakKeyDictionary[SparkSession, OrderedDict]" = (
+    weakref.WeakKeyDictionary()
+)
+_SCHEMAS_LOCK = threading.Lock()
+_SCHEMAS_PER_SESSION = 256
+
+
+def _stat_identity(path: str) -> tuple[str, tuple[int, int, int]] | None:
+    """Absolute path and (mtime_ns, size, inode) of a local file or
+    directory. None for what ``os.stat`` cannot see (a URI, a glob, a
+    missing path): Spark resolves those, and reports their errors,
+    uncached."""
+    p = os.path.abspath(path)
+    try:
+        st = os.stat(p)
+    except (OSError, ValueError):
+        return None
+    return p, (st.st_mtime_ns, st.st_size, st.st_ino)
+
+
+def _cache_schema(spark: SparkSession, ident, schema: T.StructType) -> None:
+    path, stat = ident
+    with _SCHEMAS_LOCK:
+        cache = _SCHEMAS.setdefault(spark, OrderedDict())
+        cache[path] = (stat, schema)
+        cache.move_to_end(path)
+        while len(cache) > _SCHEMAS_PER_SESSION:
+            cache.popitem(last=False)
+
+
+def parquet_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The schema ``spark.read.parquet(path)`` infers from the footers.
+
+    Inference launches one Spark job (about 80 ms warm), so the result
+    is kept per session under the path's identity (absolute path,
+    mtime, size, inode): a later call for the unchanged file or
+    directory costs an ``os.stat``. A rewritten file, or a directory
+    whose listing changed (every Spark write adds new file names), is
+    inferred again; a file edited in place inside a directory is not
+    seen. Safe to call from many threads at once."""
+    ident = _stat_identity(path)
+    if ident is not None:
+        with _SCHEMAS_LOCK:
+            cache = _SCHEMAS.get(spark)
+            hit = cache.get(ident[0]) if cache is not None else None
+            if hit is not None and hit[0] == ident[1]:
+                cache.move_to_end(ident[0])
+                return hit[1]
+    schema = spark.read.parquet(path).schema
+    if ident is not None:
+        _cache_schema(spark, ident, schema)
+    return schema
+
+
+def _as_nullable(t: T.DataType) -> T.DataType:
+    """Spark's ``asNullable``: what a Parquet read reports for a type."""
+    if isinstance(t, T.StructType):
+        return T.StructType([
+            T.StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+            for f in t.fields
+        ])
+    if isinstance(t, T.ArrayType):
+        return T.ArrayType(_as_nullable(t.elementType), True)
+    if isinstance(t, T.MapType):
+        return T.MapType(_as_nullable(t.keyType), _as_nullable(t.valueType), True)
+    return t
+
+
+def remember_parquet_schema(
+    spark: SparkSession, path: str, schema: T.StructType
+) -> None:
+    """Record the schema of a directory Spark has just written (without
+    ``partitionBy``) from ``schema``, the written DataFrame's: Spark
+    stores it in every footer, and inference returns it made nullable.
+    The next :func:`parquet_schema` of the unchanged directory then
+    needs no job. Call it once the directory is complete."""
+    ident = _stat_identity(path)
+    if ident is not None:
+        _cache_schema(spark, ident, _as_nullable(schema))
+
+
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """IO1: parquet scan (reference ``data_core.py:73-79``)."""
-    return spark.read.parquet(path)
+    """IO1: parquet scan (reference ``data_core.py:73-79``), read with
+    the :func:`parquet_schema` of ``path``: no job when that is cached.
+    Only the schema is cached, never the DataFrame: every call returns
+    a new relation with its own attribute ids, so one query can read a
+    table twice without an ambiguous self-join."""
+    return spark.read.schema(parquet_schema(spark, path)).parquet(path)
 
 
 def write_parquet(
@@ -215,7 +308,7 @@ def read_parquet_or_empty(spark: SparkSession, path: str) -> DataFrame:
     (``storage.py:153-194``, returns ``pd.DataFrame()`` when absent)."""
     if not os.path.exists(path):
         return spark.createDataFrame([], "struct<>")
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def bulk_load(

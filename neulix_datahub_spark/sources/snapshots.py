@@ -55,6 +55,8 @@ import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
 
+from neulix_datahub_spark.sources.io import read_parquet, remember_parquet_schema
+
 POINTER = "_VERSION"
 #: Writer stamp inside a version dir; the underscore keeps Spark's file
 #: index from reading it as data.
@@ -249,7 +251,7 @@ def read_snapshot_table(
     v = version or current_version(root)
     if v is None:
         raise FileNotFoundError(f"no published snapshot under {root}")
-    return spark.read.parquet(os.path.join(root, v))
+    return read_parquet(spark, os.path.join(root, v))
 
 
 def version_at(root: str, timestamp: float) -> str:
@@ -373,6 +375,9 @@ def write_snapshot(
     except ConcurrentSnapshotError:
         shutil.rmtree(final, ignore_errors=True)
         raise
+    # the next read of this version (a stream's next micro-batch) then
+    # launches no schema-inference job
+    remember_parquet_schema(df.sparkSession, final, df.schema)
     return version
 
 

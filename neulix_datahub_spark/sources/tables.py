@@ -13,6 +13,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from neulix_datahub_spark.sources.io import parquet_schema, read_parquet
+
 TABLES = (
     "region",
     "nation",
@@ -41,7 +43,10 @@ _NANOS_TS_COLUMNS = {"events": ("ts",)}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one fixture table. Parquet is self-describing; no inference cost.
+    """Read one fixture table through ``io.read_parquet``: the footer
+    schema is inferred (one Spark job, about 80 ms) on the first load of
+    each file in a session and reused while the file is unchanged, so a
+    repeated load launches no job.
 
     Sets ``spark.sql.legacy.parquet.nanosAsLong`` here, not only in the
     session factory: callers (the correctness driver among them) may hand us
@@ -49,10 +54,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     the read with PARQUET_TYPE_ILLEGAL. The conf is runtime-settable.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    df = read_parquet(spark, path)
+    schema = parquet_schema(spark, path)  # cached by the read: no job
     for c in _NANOS_TS_COLUMNS.get(name, ()):
-        field = df.schema[c] if c in df.columns else None
-        if field is not None and isinstance(field.dataType, T.LongType):
+        if c in schema.names and isinstance(schema[c].dataType, T.LongType):
             # Integer DIV, not `/`: epoch-nanos exceed double-precision range.
             df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` DIV 1000")))
     return df

@@ -823,3 +823,134 @@ def test_synthetic_stream_read_between_offsets(spark):
     # and it agrees with the live read of the same window
     live, nxt = r.read({"pos": 25})
     assert list(live) == replay and nxt == {"pos": 50}
+
+
+# --- cached Parquet footer schemas (io.parquet_schema) ------------------------
+
+def _jobs_launched(spark, fn):
+    """``fn()`` and the ids of the Spark jobs it launched, counted
+    through a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"io-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count probe")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # status store is async
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _rows(df):
+    return sorted(df.collect(), key=repr)
+
+
+def test_load_table_second_load_launches_no_job(spark, tmp_path):
+    import shutil
+
+    from pyspark.sql import types as T
+
+    from neulix_datahub_spark.sources.tables import load_table
+    from tests.conftest import SF_DIR
+
+    shutil.copy(f"{SF_DIR}/events.parquet", tmp_path / "events.parquet")
+    first, jobs = _jobs_launched(spark, lambda: load_table(spark, str(tmp_path), "events"))
+    assert jobs, "the first load infers the footer schema: one job"
+    second, jobs = _jobs_launched(spark, lambda: load_table(spark, str(tmp_path), "events"))
+    assert jobs == []
+    assert second.schema == first.schema
+    assert isinstance(second.schema["ts"].dataType, (T.TimestampType, T.TimestampNTZType))
+    assert _rows(second) == _rows(first)
+
+
+def test_load_table_sees_a_file_rewritten_in_place(spark, tmp_path):
+    import pandas as pd
+
+    from neulix_datahub_spark.sources.tables import load_table
+
+    path = tmp_path / "region.parquet"
+    pd.DataFrame({"r_regionkey": [0, 1], "r_name": ["a", "b"]}).to_parquet(
+        path, index=False)
+    assert load_table(spark, str(tmp_path), "region").columns == [
+        "r_regionkey", "r_name"]
+    pd.DataFrame({"r_regionkey": [0, 1, 2], "r_name": ["a", "b", "c"],
+                  "r_extra": [0.5, 1.5, 2.5]}).to_parquet(path, index=False)
+    got = load_table(spark, str(tmp_path), "region")
+    assert got.columns == ["r_regionkey", "r_name", "r_extra"]
+    assert [tuple(r) for r in _rows(got)] == [(0, "a", 0.5), (1, "b", 1.5), (2, "c", 2.5)]
+
+
+def test_read_snapshot_table_follows_published_schemas(spark, tmp_path):
+    """A version a writer just published reads with no job and with the
+    schema inference would give; a new column shows up in the next
+    version while a pinned old version keeps its own schema, and a root
+    rebuilt from scratch (reusing ``v00000001``) is not confused with
+    the old one."""
+    import shutil
+
+    from neulix_datahub_spark.sources.io import parquet_schema
+    from neulix_datahub_spark.sources.snapshots import (
+        read_snapshot_table, upsert_snapshot, write_snapshot,
+    )
+
+    root = str(tmp_path / "snap")
+    v1 = write_snapshot(spark.createDataFrame([(1, "a")], "k long, s string"), root)
+    assert read_snapshot_table(spark, root).columns == ["k", "s"]
+    updates = spark.createDataFrame(
+        [(2, "b", [1.5], {"x": 1})], "k long, s string, w array<double>, m map<string,int>")
+    v2 = upsert_snapshot(spark, root, updates, key="k", allow_new_columns=True)
+    cur, jobs = _jobs_launched(spark, lambda: read_snapshot_table(spark, root))
+    assert jobs == []
+    assert cur.schema == spark.read.parquet(f"{root}/{v2}").schema
+    assert cur.columns == ["k", "s", "w", "m"]
+    assert [(r.k, r.s, r.w) for r in _rows(cur)] == [(1, "a", None), (2, "b", [1.5])]
+    assert read_snapshot_table(spark, root, version=v1).columns == ["k", "s"]
+
+    # the recorded schema is the inferred one: non-null columns read nullable
+    nn_root = str(tmp_path / "nn")
+    nn = write_snapshot(spark.range(2).select("id", F.array("id").alias("a")), nn_root)
+    assert parquet_schema(spark, f"{nn_root}/{nn}") == spark.read.parquet(f"{nn_root}/{nn}").schema
+
+    shutil.rmtree(root)
+    again = write_snapshot(spark.createDataFrame([(3.0,)], "z double"), root)
+    assert again == v1
+    assert [tuple(r) for r in read_snapshot_table(spark, root).collect()] == [(3.0,)]
+
+
+def test_load_table_from_eight_threads(spark, tmp_path):
+    import shutil
+    from concurrent.futures import ThreadPoolExecutor
+
+    from neulix_datahub_spark.sources.tables import load_table
+    from tests.conftest import SF_DIR
+
+    names = ("region", "nation", "customer", "supplier", "part", "orders",
+             "lineitem", "events")
+    want = {n: load_table(spark, SF_DIR, n).schema for n in names}
+    for n in names:
+        shutil.copy(f"{SF_DIR}/{n}.parquet", tmp_path / f"{n}.parquet")
+    with ThreadPoolExecutor(8) as pool:
+        got = list(pool.map(
+            lambda n: (n, load_table(spark, str(tmp_path), n).schema), names * 3))
+    assert len(got) == 3 * len(names)
+    for n, schema in got:
+        assert schema == want[n], n
+
+
+def test_parquet_schema_is_scoped_to_the_session(spark, tmp_path):
+    import pandas as pd
+
+    from pyspark.sql import types as T
+
+    from neulix_datahub_spark.sources.io import parquet_schema
+
+    path = str(tmp_path / "b.parquet")
+    pd.DataFrame({"b": [b"x", b"y"]}).to_parquet(path, index=False)
+    assert parquet_schema(spark, path)["b"].dataType == T.BinaryType()
+    other = spark.newSession()
+    other.conf.set("spark.sql.parquet.binaryAsString", "true")
+    assert parquet_schema(other, path)["b"].dataType == T.StringType()
+    assert read_parquet(other, path).collect()[0]["b"] in ("x", "y")
+    assert parquet_schema(spark, path)["b"].dataType == T.BinaryType()

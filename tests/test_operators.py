@@ -2084,6 +2084,34 @@ def test_connected_components_driver_gate_parity(spark):
         assert uf == comp
 
 
+def test_connected_components_star_request_skips_driver_shortcut(
+    spark, monkeypatch
+):
+    """An explicit ``algorithm="star"`` runs the star contraction even
+    when the graph is under the driver union-find gate, and labels the
+    same components as the default path."""
+    from neulix_datahub_spark.operators import components
+
+    calls = []
+    star = components._star_components
+
+    def recording(sym, max_iter):
+        calls.append(max_iter)
+        return star(sym, max_iter)
+
+    monkeypatch.setattr(components, "_star_components", recording)
+    df = spark.createDataFrame(
+        [(1, 2), (2, 3), (7, 8), (9, 9), (3, 4)], "id_a long, id_b long"
+    )
+    default = {r.id: r.component
+               for r in components.connected_components(df).collect()}
+    assert calls == []  # small graph: the default takes the driver path
+    starred = {r.id: r.component for r in components.connected_components(
+        df, algorithm="star").collect()}
+    assert calls == [10]
+    assert starred == default == {1: 1, 2: 1, 3: 1, 4: 1, 7: 7, 8: 7, 9: 9}
+
+
 def test_profile_edge_guards_r9(spark):
     """Round-9 review: value_histogram refuses degenerate ranges loudly
     (previously an ANSI Inf->int cast exploded deep in the plan);
