@@ -17,12 +17,14 @@ which also handles rows whose GROUP KEY changes (the pre-image leaves
 the old group, the post-image enters the new one) — the case a naive
 "overwrite changed keys" consumer gets wrong.
 
-Plan: the feed aggregates map-side to one delta row per touched group
-(O(|changes|) shuffle), then one outer join against the existing
-aggregate (broadcast when the delta side is small, which it is by
-construction). The maintained result is proven equal to a full
-recompute by the ``incremental_agg_check`` driver query and the
-round-trip law unit.
+Plan: one union and one regroup. Each feed row becomes a signed row
+(weight ±1, ±value); the stored aggregate joins the union as one row
+per group (weight = its count, value = its sum); one ``groupBy`` on
+the group keys sums both and drops groups whose count reaches zero.
+That is one hash shuffle (map-side partial sums, so
+O(|changes| + |groups|) rows cross it) and no join. The maintained
+result is proven equal to a full recompute by the
+``incremental_agg_check`` driver query and the round-trip law unit.
 
 Caveat (documented, inherent): float sums accumulate in a different
 order than a recompute, so equality is exact for counts/ints and
@@ -30,18 +32,18 @@ within-1e-9-relative for doubles; long-running pipelines should
 periodically re-snapshot the aggregate (same answer, fresh float error)
 — standard practice for any incremental view maintenance system.
 Maintain money columns as DECIMAL to make the sums associative and the
-maintained value EXACTLY equal to a recompute forever (the fill zeros
-below are type-preserving, so decimal columns stay decimal through the
-merge).
+maintained value EXACTLY equal to a recompute forever (the SUM0 zeros
+keep the column's type, so decimal columns stay decimal through the
+regroup).
 
 NULL conventions (both deliberate, both required for the delta algebra
 to be exact):
 
 - **Group keys are null-safe.** A NULL group key is one group, exactly
-  as ``groupBy`` treats it — the merge join matches on ``eqNullSafe``,
-  because a null-unsafe join would never match the stored NULL-key row
-  with its delta and the group would silently fork into two rows, one
-  per batch.
+  as ``groupBy`` treats it: the regroup puts the stored NULL-key row
+  and its signed feed rows in one group (an equi-join on the keys
+  would never match them, and the group would fork into two rows, one
+  per batch).
 - **Sums are SUM0 (0-coalesced).** A group whose values are all NULL
   reports sum 0, not SQL's NULL. This is what makes signed maintenance
   exact under DELETES: "remove the last non-null value" must land on a
@@ -64,34 +66,21 @@ _SIGN = {
 }
 
 
-def agg_delta(
-    feed: DataFrame, group_cols: list[str], sum_map: dict[str, str]
-) -> DataFrame:
-    """Collapse a pre-image change feed into one signed delta row per
-    touched group: ``__dcnt`` (row-count delta) and one ``__d_<out>``
-    per maintained sum. ``sum_map`` maps output sum-column name ->
-    source column in the feed."""
-    if "_change_type" not in feed.columns:
-        raise ValueError("feed must carry _change_type (snapshot_diff pre_image=True)")
-    sign = F.col("_change_type")
-    adds = [t for t, s in _SIGN.items() if s == 1]
-    subs = [t for t, s in _SIGN.items() if s == -1]
-    sign_val = (
-        F.when(sign.isin(*adds), F.lit(1))
-        .when(sign.isin(*subs), F.lit(-1))
-        .otherwise(F.raise_error(F.concat(F.lit("unknown _change_type: "), sign)))
-    )
-    return (
-        feed.withColumn("__sign", sign_val)
-        .groupBy(*group_cols)
-        .agg(
-            F.sum("__sign").alias("__dcnt"),
-            *[
-                F.sum(F.col("__sign") * F.col(src)).alias(f"__d_{out}")
-                for out, src in sum_map.items()
-            ],
-        )
-    )
+def _q(name: str) -> str:
+    """``name`` as a quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _in(sign: int) -> str:
+    return ", ".join(f"'{t}'" for t, s in _SIGN.items() if s == sign)
+
+
+#: A change row's sign; an unknown change type fails the query.
+_SIGN_SQL = (
+    f"CASE WHEN _change_type IN ({_in(1)}) THEN 1 "
+    f"WHEN _change_type IN ({_in(-1)}) THEN -1 "
+    "ELSE raise_error(concat('unknown _change_type: ', _change_type)) END"
+)
 
 
 def apply_agg_delta(
@@ -105,45 +94,35 @@ def apply_agg_delta(
     keys) against a pre-image change feed. Returns the updated
     aggregate: groups whose maintained count reaches zero disappear
     (they have no remaining rows), brand-new groups appear.
+
+    The feed is the union's first side, so the result belongs to the
+    feed's session even when ``agg`` was read through another one (an
+    ``Observation`` on the feed completes only when its own session runs
+    the plan).
     """
     missing = [c for c in (*group_cols, count_col, *sum_map) if c not in agg.columns]
     if missing:
         raise ValueError(f"agg is missing columns: {missing}")
-    delta = agg_delta(feed, group_cols, sum_map)
-    # NULL-SAFE group match (see module docstring): `on=group_cols`
-    # would use null-unsafe equality, so a NULL group key stored in the
-    # aggregate could never meet its delta — the group would emit two
-    # rows (stale + delta-only) and fork further every batch.
-    a, d = agg.alias("__a"), delta.alias("__d")
-    cond = None
-    for c in group_cols:
-        e = F.col(f"__a.{c}").eqNullSafe(F.col(f"__d.{c}"))
-        cond = e if cond is None else cond & e
-    merged = a.join(d, on=cond, how="full_outer")
-    zero = F.lit(0)
-    out = merged.select(
-        *[
-            F.when(F.col(f"__d.__dcnt").isNull(), F.col(f"__a.{c}"))
-            .otherwise(F.col(f"__d.{c}"))
-            .alias(c)
-            for c in group_cols
-        ],
-        (
-            F.coalesce(F.col(f"__a.{count_col}"), zero)
-            + F.coalesce(F.col("__d.__dcnt"), zero)
-        ).alias(count_col),
-        *[
-            (
-                F.coalesce(
-                    F.col(f"__a.{out_col}"),
-                    F.lit(0).cast(agg.schema[out_col].dataType),
-                )
-                + F.coalesce(
-                    F.col(f"__d.__d_{out_col}"),
-                    F.lit(0).cast(agg.schema[out_col].dataType),
-                )
-            ).alias(out_col)
-            for out_col in sum_map
-        ],
+    if "_change_type" not in feed.columns:
+        raise ValueError("feed must carry _change_type (snapshot_diff pre_image=True)")
+    keys = [_q(c) for c in group_cols]
+    # one row per change: __w its sign, __v<i> the sign times sum i's source
+    signed = feed.selectExpr(
+        *keys, f"{_SIGN_SQL} AS __w",
+        *[f"{_q(src)} AS __s{i}" for i, src in enumerate(sum_map.values())],
+    ).selectExpr(*keys, "__w", *[f"__w * __s{i} AS __v{i}" for i in range(len(sum_map))])
+    # one row per stored group: __w its count, __v<i> its sum i
+    stored = agg.selectExpr(
+        *keys, f"{_q(count_col)} AS __w",
+        *[f"coalesce({_q(out)}, 0) AS __v{i}" for i, out in enumerate(sum_map)],
     )
-    return out.filter(F.col(count_col) > 0)
+    return (
+        signed.unionByName(stored)
+        .groupBy(*group_cols)
+        .agg(
+            F.expr(f"coalesce(sum(__w), 0) AS {_q(count_col)}"),
+            *[F.expr(f"coalesce(sum(__v{i}), 0) AS {_q(out)}")
+              for i, out in enumerate(sum_map)],
+        )
+        .filter(f"{_q(count_col)} > 0")
+    )

@@ -67,15 +67,58 @@ def warehouse_scratch(
     return path
 
 
-#: Parquet footer schemas per SparkSession (a new session may read
-#: under other Parquet confs): absolute path -> (stat identity, schema),
-#: least recently used first, bounded so a stream that reads a new
-#: snapshot version every micro-batch cannot grow it without limit.
-_SCHEMAS: "weakref.WeakKeyDictionary[SparkSession, OrderedDict]" = (
+#: Session confs that change what Parquet footer inference returns.
+#: A session's values of them (its explicit settings; unset reads None)
+#: are part of every cache key, so a session and its clones (a
+#: foreachBatch batch runs in one) share entries, while a session under
+#: other settings (``binaryAsString``, ``nanosAsLong`` and the like)
+#: never sees a schema inferred under these.
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.caseSensitive",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.session.timeZone",
+)
+#: Those values per session object, read at its first cached read:
+#: change them before reading, or through :func:`_set_parquet_read_conf`.
+_CONF_KEYS: "weakref.WeakKeyDictionary[SparkSession, tuple]" = (
     weakref.WeakKeyDictionary()
 )
+#: (conf values, absolute path) -> [stat identity, schema, JVM schema or
+#: None until a classic-session read parses it], least recently used
+#: first, bounded so a stream that reads a new snapshot version every
+#: micro-batch cannot grow it without limit.
+_SCHEMAS: OrderedDict = OrderedDict()
 _SCHEMAS_LOCK = threading.Lock()
-_SCHEMAS_PER_SESSION = 256
+_SCHEMAS_MAX = 512
+
+
+def _conf_key(spark: SparkSession) -> tuple:
+    with _SCHEMAS_LOCK:
+        key = _CONF_KEYS.get(spark)
+    if key is None:
+        key = tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS)
+        with _SCHEMAS_LOCK:
+            key = _CONF_KEYS.setdefault(spark, key)
+    return key
+
+
+def _set_parquet_read_conf(spark: SparkSession, key: str, value: str) -> None:
+    """Set ``key``, one of the confs Parquet schema inference depends
+    on, to ``value`` on ``spark``, and keep the session's cache key in
+    step. A no-op (no JVM call) when the session already has it."""
+    i = _INFERENCE_CONFS.index(key)
+    if _conf_key(spark)[i] == value:
+        return
+    spark.conf.set(key, value)
+    with _SCHEMAS_LOCK:
+        old = _CONF_KEYS[spark]
+        _CONF_KEYS[spark] = (*old[:i], value, *old[i + 1:])
 
 
 def _stat_identity(path: str) -> tuple[str, tuple[int, int, int]] | None:
@@ -91,38 +134,48 @@ def _stat_identity(path: str) -> tuple[str, tuple[int, int, int]] | None:
     return p, (st.st_mtime_ns, st.st_size, st.st_ino)
 
 
-def _cache_schema(spark: SparkSession, ident, schema: T.StructType) -> None:
+def _cache_schema(spark: SparkSession, ident, schema: T.StructType) -> list:
     path, stat = ident
+    entry = [stat, schema, None]
+    key = (_conf_key(spark), path)
     with _SCHEMAS_LOCK:
-        cache = _SCHEMAS.setdefault(spark, OrderedDict())
-        cache[path] = (stat, schema)
-        cache.move_to_end(path)
-        while len(cache) > _SCHEMAS_PER_SESSION:
-            cache.popitem(last=False)
+        _SCHEMAS[key] = entry
+        _SCHEMAS.move_to_end(key)
+        while len(_SCHEMAS) > _SCHEMAS_MAX:
+            _SCHEMAS.popitem(last=False)
+    return entry
+
+
+def _schema_entry(spark: SparkSession, path: str) -> list:
+    """The cache entry of ``path`` under ``spark``'s confs, inferred
+    (one Spark job) on a miss; a transient entry for what ``os.stat``
+    cannot see."""
+    ident = _stat_identity(path)
+    if ident is not None:
+        key = (_conf_key(spark), ident[0])
+        with _SCHEMAS_LOCK:
+            hit = _SCHEMAS.get(key)
+            if hit is not None and hit[0] == ident[1]:
+                _SCHEMAS.move_to_end(key)
+                return hit
+    schema = spark.read.parquet(path).schema
+    if ident is None:
+        return [None, schema, None]
+    return _cache_schema(spark, ident, schema)
 
 
 def parquet_schema(spark: SparkSession, path: str) -> T.StructType:
     """The schema ``spark.read.parquet(path)`` infers from the footers.
 
     Inference launches one Spark job (about 80 ms warm), so the result
-    is kept per session under the path's identity (absolute path,
-    mtime, size, inode): a later call for the unchanged file or
-    directory costs an ``os.stat``. A rewritten file, or a directory
-    whose listing changed (every Spark write adds new file names), is
-    inferred again; a file edited in place inside a directory is not
-    seen. Safe to call from many threads at once."""
-    ident = _stat_identity(path)
-    if ident is not None:
-        with _SCHEMAS_LOCK:
-            cache = _SCHEMAS.get(spark)
-            hit = cache.get(ident[0]) if cache is not None else None
-            if hit is not None and hit[0] == ident[1]:
-                cache.move_to_end(ident[0])
-                return hit[1]
-    schema = spark.read.parquet(path).schema
-    if ident is not None:
-        _cache_schema(spark, ident, schema)
-    return schema
+    is kept under the session's inference confs and the path's identity
+    (absolute path, mtime, size, inode): a later call for the unchanged
+    file or directory, from this session or one with the same confs,
+    costs an ``os.stat``. A rewritten file, or a directory whose listing
+    changed (every Spark write adds new file names), is inferred again;
+    a file edited in place inside a directory is not seen. Safe to call
+    from many threads at once."""
+    return _schema_entry(spark, path)[1]
 
 
 def _as_nullable(t: T.DataType) -> T.DataType:
@@ -157,8 +210,16 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     the :func:`parquet_schema` of ``path``: no job when that is cached.
     Only the schema is cached, never the DataFrame: every call returns
     a new relation with its own attribute ids, so one query can read a
-    table twice without an ambiguous self-join."""
-    return spark.read.schema(parquet_schema(spark, path)).parquet(path)
+    table twice without an ambiguous self-join. On a classic session
+    the entry also keeps the schema's JVM object, so a cached read costs
+    three JVM calls; Spark Connect takes the public reader."""
+    entry = _schema_entry(spark, path)
+    jspark = getattr(spark, "_jsparkSession", None)
+    if jspark is None:  # Spark Connect: no JVM handle
+        return spark.read.schema(entry[1]).parquet(path)
+    if entry[2] is None:
+        entry[2] = jspark.parseDataType(entry[1].json())
+    return DataFrame(jspark.read().schema(entry[2]).parquet(path), spark)
 
 
 def write_parquet(

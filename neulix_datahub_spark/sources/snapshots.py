@@ -330,12 +330,15 @@ _UNSET = object()
 
 
 def write_snapshot(
-    df: DataFrame, root: str, expected=_UNSET, stamp: dict | None = None
+    df: DataFrame, root: str, expected=_UNSET, stamp=None
 ) -> str:
     """Full-table publish: write ``df`` as the next immutable snapshot,
     then atomically move the pointer. Returns the new version name.
     ``stamp`` (a JSON-able dict) is committed with the data; read it
-    back with :func:`read_stamp`.
+    back with :func:`read_stamp`. It may also be a callable returning
+    that dict, called once the data is written and before the version
+    is renamed final: a stamp computed by the write itself (an
+    ``Observation`` on ``df``) still publishes atomically with it.
 
     ``expected`` is the version this writer's input was derived from
     (pass what you read); the publish CAS-fails if the pointer moved off
@@ -361,7 +364,7 @@ def write_snapshot(
     version = _next_version(root)
     staging = os.path.join(root, f".{version}_{uuid.uuid4().hex[:8]}")
     df.write.mode("overwrite").parquet(staging)
-    _write_stamp(staging, stamp)
+    _write_stamp(staging, stamp() if callable(stamp) else stamp)
     final = os.path.join(root, version)
     try:
         os.rename(staging, final)

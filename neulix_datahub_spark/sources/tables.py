@@ -13,7 +13,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from neulix_datahub_spark.sources.io import parquet_schema, read_parquet
+from neulix_datahub_spark.sources.io import (
+    parquet_schema,
+    read_parquet,
+    _set_parquet_read_conf,
+)
 
 TABLES = (
     "region",
@@ -51,9 +55,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     Sets ``spark.sql.legacy.parquet.nanosAsLong`` here, not only in the
     session factory: callers (the correctness driver among them) may hand us
     a plain session, and without the flag any TIMESTAMP(NANOS) column aborts
-    the read with PARQUET_TYPE_ILLEGAL. The conf is runtime-settable.
+    the read with PARQUET_TYPE_ILLEGAL. The conf is runtime-settable; it
+    is set through ``io._set_parquet_read_conf``, which keeps the schema
+    cache's key in step and skips the JVM call once it is set.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    _set_parquet_read_conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true")
     path = f"{sf_dir}/{name}.parquet"
     df = read_parquet(spark, path)
     schema = parquet_schema(spark, path)  # cached by the read: no job

@@ -27,7 +27,7 @@ from __future__ import annotations
 import logging
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -165,9 +165,17 @@ class _ReplayGuard:
     the whole replay protocol run at most once per query lifetime; the
     restamp/rebuild stamps re-align the table with the new lineage so
     later runs never consult the dead one.
+
+    ``fold_observes``: the sink's fold publishes the feed it is handed
+    in one write, in the feed's session. A delivery that ``decide``
+    can only fold — normal mode, and no stamp or a larger batch id than
+    the stamp's — then skips the separate fingerprint aggregate: the
+    fingerprint is an ``Observation`` on the feed, read after the write
+    and committed as the stamp before the version is renamed final.
     """
 
-    def __init__(self) -> None:
+    def __init__(self, fold_observes: bool = False) -> None:
+        self.fold_observes = fold_observes
         self.mode = "normal"
         self.replay_done = False
         self.cum_n = 0
@@ -243,7 +251,22 @@ class _ReplayGuard:
         staged rows); ``restamp(new_stamp)`` republishes the committed
         state unchanged. Every publish carries the stamp of what the
         table then holds: this batch's (id, fingerprint) and the
-        cumulative fingerprint."""
+        cumulative fingerprint. ``new_stamp`` is a callable when the
+        fingerprint rides the fold's write (see ``fold_observes``)."""
+        cn, cx = (stamp["cn"], stamp["cx"]) if stamp else (0, 0)
+        if self.fold_observes and self.mode == "normal" and (
+            stamp is None or batch_id > stamp["id"]
+        ):
+            obs = Observation()
+            feed = batch_df.observe(obs, *_fingerprint_exprs(batch_df))
+
+            def observed() -> dict:
+                got = obs.get
+                n, x = int(got["n"]), int(got["x"])
+                return {"id": batch_id, "n": n, "x": x, "cn": cn + n, "cx": cx ^ x}
+
+            fold(feed, True, observed)
+            return
         fp_n, fp_x = _batch_fingerprint(batch_df)
         action = self.decide(batch_id, fp_n, fp_x, stamp)
         if action == "skip":
@@ -258,7 +281,6 @@ class _ReplayGuard:
             return {"id": batch_id, "n": fp_n, "x": fp_x, "cn": cn, "cx": cx}
 
         if action == "fold":
-            cn, cx = (stamp["cn"], stamp["cx"]) if stamp else (0, 0)
             fold(batch_df, True, stamped(cn + fp_n, cx ^ fp_x))
             return
         if action == "restamp":
@@ -287,6 +309,18 @@ class _ReplayGuard:
         self.staged = []
 
 
+def _fingerprint_exprs(df: DataFrame) -> list[Column]:
+    """The fingerprint's two aggregates over ``df``: ``n`` (row count)
+    and ``x`` (bit-XOR of per-row xxhash64 over all columns, 0 when
+    there are no rows). One definition for the up-front aggregate and
+    the ``Observation`` that rides a fold's write."""
+    cols = ", ".join("`" + c.replace("`", "``") + "`" for c in df.columns)
+    return [
+        F.expr("count(1) AS n"),
+        F.expr(f"coalesce(bit_xor(xxhash64({cols})), 0) AS x"),
+    ]
+
+
 def _batch_fingerprint(batch_df: DataFrame) -> tuple[int, int]:
     """Order-independent content fingerprint of a micro-batch:
     (row count, bit-XOR of per-row xxhash64 over all columns). XOR is
@@ -301,13 +335,7 @@ def _batch_fingerprint(batch_df: DataFrame) -> tuple[int, int]:
     silently dropping data). A monotonic batch id alone cannot make
     that distinction — ids are only comparable within one continuous
     checkpoint lineage."""
-    row = batch_df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(
-            F.bit_xor(F.xxhash64(*[F.col(c) for c in batch_df.columns])),
-            F.lit(0),
-        ).alias("x"),
-    ).first()
+    row = batch_df.agg(*_fingerprint_exprs(batch_df)).first()
     return int(row["n"]), int(row["x"])
 
 
@@ -363,8 +391,9 @@ def stream_agg_maintain_to_parquet(
     """Continuously maintain a count/sum MATERIALIZED AGGREGATE from an
     append-only stream — the streaming face of
     ``operators/incremental.py``: each micro-batch is treated as a pure
-    insert feed, collapsed map-side to one delta row per touched group,
-    and merged into the aggregate snapshot table. Unlike the
+    insert feed, unioned with the aggregate snapshot table and regrouped
+    (one shuffle, map-side partial sums), and the result is published
+    as the next version in one write. Unlike the
     ``output_mode="update"`` + MERGE rollup (stream_upsert_to_parquet),
     NO Spark aggregation state is held: the accumulated truth lives in
     the snapshot table, so the aggregate survives checkpoint loss and
@@ -393,18 +422,22 @@ def stream_agg_maintain_to_parquet(
       content) raises instead of guessing. See ``_ReplayGuard``.
 
     Fingerprints are order-independent (count + XOR of row hashes,
-    ``_batch_fingerprint``) and are the snapshot commit's stamp
+    ``_fingerprint_exprs``) and are the snapshot commit's stamp
     (``snapshots.read_stamp``), so they publish atomically with the
-    data they describe. A table written by the older row-stamped layout
-    is refused with a ``ValueError``.
+    data they describe. A delivery that can only fold (no stamp yet, or
+    a batch id past the stamp's, outside a replay) computes its
+    fingerprint as an ``Observation`` riding the publish write, so a
+    steady-state batch costs one shuffle and one write; every other
+    delivery fingerprints up front. A table written by the older
+    row-stamped layout is refused with a ``ValueError``.
     """
     from neulix_datahub_spark.operators.incremental import apply_agg_delta
 
     spark = stream_df.sparkSession
     # per-run replay tracker (foreachBatch calls arrive sequentially)
-    run = _ReplayGuard()
+    run = _ReplayGuard(fold_observes=True)
 
-    def _fold(feed: DataFrame, incremental: bool, stamp: dict) -> None:
+    def _fold(feed: DataFrame, incremental: bool, stamp) -> None:
         base = read_upsert_table(spark, path) if incremental else None
         if base is None:
             base = (
@@ -420,6 +453,13 @@ def stream_agg_maintain_to_parquet(
             base, feed.withColumn("_change_type", F.lit("insert")),
             group_cols, count_col, sum_map,
         )
+        if updated.sparkSession is not feed.sparkSession:
+            # an Observation on the feed would never complete: the write
+            # would run in another session, and the stamp wait forever
+            raise RuntimeError(
+                "the maintained aggregate must be planned in the batch's "
+                "session (the feed first in the union)"
+            )
         _publish(updated, path, stamp, retain_versions)
 
     def _restamp(stamp: dict) -> None:

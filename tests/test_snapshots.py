@@ -519,11 +519,13 @@ def test_agg_delta_rejects_plain_feed(spark, tmp_path):
     maintain sums — the operator refuses instead of silently drifting."""
     import pytest as _pytest
 
-    from neulix_datahub_spark.operators.incremental import agg_delta, apply_agg_delta
+    from neulix_datahub_spark.operators.incremental import apply_agg_delta
     from neulix_datahub_spark.sources.snapshots import snapshot_diff, write_snapshot
 
+    agg = spark.createDataFrame([("a", 1, 1.0)], "g string, cnt bigint, s double")
     with _pytest.raises(ValueError, match="_change_type"):
-        agg_delta(spark.createDataFrame([(1,)], "id int"), ["id"], {})
+        apply_agg_delta(agg, spark.createDataFrame([("a", 1.0)], "g string, v double"),
+                        ["g"], "cnt", {"s": "v"})
 
     root = str(tmp_path / "t")
     v1 = spark.createDataFrame([(1, "a", 1.0)], "id int, g string, v double")
@@ -532,7 +534,7 @@ def test_agg_delta_rejects_plain_feed(spark, tmp_path):
     write_snapshot(v2, root)
     plain = snapshot_diff(spark, root, ver1, key="id")  # 'update' rows
     with _pytest.raises(Exception, match="unknown _change_type"):
-        agg_delta(plain, ["g"], {"s": "v"}).collect()
+        apply_agg_delta(agg, plain, ["g"], "cnt", {"s": "v"}).collect()
 
     # agg missing a maintained column is a loud error too
     feed = snapshot_diff(spark, root, ver1, key="id", pre_image=True)
@@ -1090,3 +1092,85 @@ def test_stamp_commits_with_its_version(spark, tmp_path, monkeypatch):
         json.dump({"layout": "stamp/99", "id": 0}, f)
     with pytest.raises(ValueError, match="stamp/99"):
         read_stamp(root, v1)
+
+
+def _agg_delta_inputs(spark, sum_type: str, src_type: str):
+    agg = spark.createDataFrame(
+        [(None, 5, 10), ("a", 2, 4)], "g string, cnt long, s int"
+    ).selectExpr("g", "cnt", f"cast(s as {sum_type}) s")
+    feed = spark.createDataFrame(
+        [(None, 3, "insert"), ("b", 7, "insert"), ("a", 4, "delete"), ("a", None, "insert")],
+        "g string, v int, _change_type string",
+    ).selectExpr("g", f"cast(v as {src_type}) v", "_change_type")
+    return agg, feed
+
+
+def test_apply_agg_delta_is_one_shuffle_and_no_join(spark):
+    """The fold is a union and one regroup: a single hash Exchange, on
+    the group key, and no join of any kind."""
+    import re
+
+    from neulix_datahub_spark.observability import plan_summary
+    from neulix_datahub_spark.operators.incremental import apply_agg_delta
+
+    agg, feed = _agg_delta_inputs(spark, "double", "double")
+    out = apply_agg_delta(agg, feed, ["g"], "cnt", {"s": "v"})
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan_summary(out)["shuffles"] == 1
+    assert re.findall(r"Exchange hashpartitioning\((\w+)#", plan) == ["g"]
+    assert "Join" not in plan
+
+
+@pytest.mark.parametrize("sum_type,src_type,want", [
+    ("long", "long", "bigint"),
+    ("double", "double", "double"),
+    ("decimal(28,2)", "decimal(18,2)", "decimal(38,2)"),
+])
+def test_apply_agg_delta_output_types(spark, sum_type, src_type, want):
+    """The count stays a non-null long and each sum keeps the type the
+    join form gave it (decimal(28,2) state widens to decimal(38,2), as
+    Spark's SUM does); SUM0 and the delete sign hold."""
+    from decimal import Decimal
+
+    from neulix_datahub_spark.operators.incremental import apply_agg_delta
+
+    agg, feed = _agg_delta_inputs(spark, sum_type, src_type)
+    out = apply_agg_delta(agg, feed, ["g"], "cnt", {"s": "v"})
+    assert [(f.name, f.dataType.simpleString(), f.nullable) for f in out.schema] == [
+        ("g", "string", True), ("cnt", "bigint", False), ("s", want, False)]
+    got = sorted(((r.g, r.cnt, Decimal(str(r.s))) for r in out.collect()), key=str)
+    assert got == sorted([(None, 6, 13), ("a", 2, 0), ("b", 1, 7)], key=str)
+
+
+def test_apply_agg_delta_result_belongs_to_the_feeds_session(spark, tmp_path):
+    """An aggregate read through another session (a stream's, while the
+    feed is a foreachBatch batch) still yields a frame in the feed's
+    session, so an Observation on the feed completes with the write."""
+    import threading
+
+    from pyspark.sql import Observation
+
+    from neulix_datahub_spark.operators.incremental import apply_agg_delta
+
+    other = spark.newSession()
+    agg = other.createDataFrame([("a", 2, 4.0)], "g string, cnt long, s double")
+    obs = Observation()
+    feed = spark.createDataFrame(
+        [("a", 1.0, "insert"), ("b", 2.0, "insert")], "g string, v double, _change_type string"
+    ).observe(obs, F.count(F.lit(1)).alias("n"))
+    out = apply_agg_delta(agg, feed, ["g"], "cnt", {"s": "v"})
+    assert out.sparkSession is feed.sparkSession
+
+    got = {}
+
+    def write_and_observe():
+        out.write.parquet(str(tmp_path / "out"))
+        got.update(obs.get)
+
+    t = threading.Thread(target=write_and_observe, daemon=True)
+    t.start()
+    t.join(120)
+    assert not t.is_alive(), "the Observation never completed"
+    assert got == {"n": 2}
+    rows = spark.read.parquet(str(tmp_path / "out")).collect()
+    assert sorted((r.g, r.cnt, r.s) for r in rows) == [("a", 3, 5.0), ("b", 1, 2.0)]

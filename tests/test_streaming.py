@@ -1565,3 +1565,176 @@ def test_stateful_funnel_drops_null_ts_and_bounds_state():
     assert len(views) == 1  # collapsed to min
     assert clicks == [float(pd.Timestamp("2024-01-11").value // 1000)]
     # the 50 June clicks (far beyond t1 + 2x72h) were pruned
+
+
+# --- the fingerprint rides the publish (_ReplayGuard fold_observes) ----------
+
+def _drain_agg_within(spark, src, path, ckpt, timeout=180):
+    """``_drain_agg`` that fails instead of hanging: an Observation whose
+    write ran in another session would block the batch forever."""
+    import threading
+
+    import pytest
+
+    from neulix_datahub_spark.streaming.sinks import stream_agg_maintain_to_parquet
+
+    stream = (
+        spark.readStream.schema("event_type string, value double")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(str(src))
+    )
+    q = stream_agg_maintain_to_parquet(
+        stream, path, group_cols=["event_type"], count_col="n",
+        sum_map={"s": "value"}, checkpoint_dir=ckpt,
+    )
+    if not q.awaitTermination(timeout):
+        threading.Thread(target=q.stop, daemon=True).start()
+        pytest.fail(f"stream did not finish within {timeout} s")
+    assert q.exception() is None
+
+
+def test_observed_stamp_equals_batch_fingerprint(spark, tmp_path):
+    """With no stamp, or a batch id past the stamp's, the stamp comes
+    from an Observation on the fold's write: per version it equals the
+    up-front fingerprint of that batch's rows, and the cumulative pair
+    accumulates them."""
+    from neulix_datahub_spark.sources.snapshots import read_stamp, snapshot_versions
+    from neulix_datahub_spark.streaming.sinks import _batch_fingerprint
+
+    src = tmp_path / "src"
+    src.mkdir()
+    files = [
+        (str(src / "f0.parquet"), [("a", 1.0), ("b", 2.0), ("a", 2.5)]),
+        (str(src / "f1.parquet"), [("c", 3.0)]),
+    ]
+    for i, (f, rows) in enumerate(files):
+        _write_src_file(f, rows, 1_000 * (i + 1))
+    path = str(tmp_path / "agg")
+    _drain_agg_within(spark, src, path, str(tmp_path / "ckpt"))
+
+    cn, cx = 0, 0
+    for bid, (v, (f, _)) in enumerate(zip(snapshot_versions(path), files)):
+        n, x = _batch_fingerprint(
+            spark.read.schema("event_type string, value double").parquet(f))
+        cn, cx = cn + n, cx ^ x
+        assert read_stamp(path, v) == {"id": bid, "n": n, "x": x, "cn": cn, "cx": cx}
+    assert {r.event_type: (r.n, r.s) for r in read_upsert_table(spark, path).collect()} \
+        == {"a": (2, 3.5), "b": (1, 2.0), "c": (1, 3.0)}
+
+
+def test_same_id_redelivery_fingerprints_up_front_and_skips(spark, monkeypatch):
+    """A stamp with the delivery's batch id sends it down the up-front
+    path (one fingerprint aggregate), which skips the committed batch;
+    the next id folds with the stamp taken from the Observation."""
+    from neulix_datahub_spark.streaming import sinks
+
+    batch = spark.createDataFrame([("a", 1.0), ("b", 2.0)], "event_type string, value double")
+    n, x = sinks._batch_fingerprint(batch)
+    calls, folds = [], []
+    real = sinks._batch_fingerprint
+    monkeypatch.setattr(
+        sinks, "_batch_fingerprint", lambda df: calls.append(1) or real(df))
+
+    def fold(feed, incremental, new_stamp):
+        feed.collect()  # the action the Observation rides
+        folds.append(new_stamp if isinstance(new_stamp, dict) else new_stamp())
+
+    stamp = {"id": 3, "n": n, "x": x, "cn": 5, "cx": 9}
+    run = sinks._ReplayGuard(fold_observes=True)
+    run.deliver("unused", batch, 3, stamp, fold, lambda s: folds.append(s))
+    assert (calls, folds) == ([1], [])
+    run.deliver("unused", batch, 4, stamp, fold, lambda s: folds.append(s))
+    assert calls == [1]
+    assert folds == [{"id": 4, "n": n, "x": x, "cn": 5 + n, "cx": 9 ^ x}]
+
+
+def test_zero_row_batch_stamps_zero(spark, tmp_path):
+    """A micro-batch of an empty file folds nothing and still commits
+    the stamp (0, 0): the Observation completes over zero rows."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from neulix_datahub_spark.sources.snapshots import read_stamp
+
+    src = tmp_path / "src"
+    src.mkdir()
+    _write_src_file(str(src / "f0.parquet"), [("a", 1.0)], 1_000)
+    empty = str(src / "f1.parquet")
+    pq.write_table(pa.table({"event_type": pa.array([], pa.string()),
+                             "value": pa.array([], pa.float64())}), empty)
+    os.utime(empty, (2_000, 2_000))
+    path = str(tmp_path / "agg")
+    _drain_agg_within(spark, src, path, str(tmp_path / "ckpt"))
+    stamp = read_stamp(path)
+    assert (stamp["id"], stamp["n"], stamp["x"], stamp["cn"]) == (1, 0, 0, 1)
+    assert [(r.event_type, r.n, r.s) for r in read_upsert_table(spark, path).collect()] \
+        == [("a", 1, 1.0)]
+
+
+def test_sink_base_reads_launch_no_job_from_batch_one(spark, tmp_path, monkeypatch):
+    """On an empty table, the first batch publishes from its own
+    foreachBatch session, and every later base read, through the
+    stream's session, finds the schema that publish recorded: no
+    schema-inference job, for the aggregate and the upsert sinks."""
+    from neulix_datahub_spark.streaming import sinks
+
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    jobs = []
+    real = sinks.read_upsert_table
+
+    def counted(s, p):
+        j0 = dag.numTotalJobs()
+        out = real(s, p)
+        jobs.append(dag.numTotalJobs() - j0)
+        return out
+
+    monkeypatch.setattr(sinks, "read_upsert_table", counted)
+    src = tmp_path / "src"
+    src.mkdir()
+    for i in range(3):
+        _write_src_file(str(src / f"f{i}.parquet"), [("a", float(i)), ("b", 1.0)],
+                        1_000 * (i + 1))
+    _drain_agg_within(spark, src, str(tmp_path / "agg"), str(tmp_path / "ckpt"))
+    assert jobs == [0, 0, 0]  # batch 0 finds no table; batches 1 and 2 read it
+
+    jobs.clear()
+    stream = (
+        spark.readStream.schema("event_type string, value double")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(str(src))
+    )
+    q = sinks.stream_upsert_to_parquet(
+        stream, str(tmp_path / "up"), key="event_type",
+        checkpoint_dir=str(tmp_path / "ckpt_up"))
+    assert q.awaitTermination(180)
+    assert jobs == [0, 0, 0]
+    assert sorted((r.event_type, r.value) for r in real(spark, str(tmp_path / "up")).collect()) \
+        == [("a", 2.0), ("b", 1.0)]
+
+
+def test_fold_planned_outside_the_batch_session_raises(spark, tmp_path, monkeypatch):
+    """The hang guard: a maintained frame that belongs to the stream's
+    session (here, the stored aggregate returned as is) would run its
+    write outside the feed's session and leave the Observation waiting
+    forever; the sink raises before writing instead, and the table and
+    its stamp stay as they were."""
+    import pytest
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    from neulix_datahub_spark.operators import incremental
+    from neulix_datahub_spark.sources.snapshots import current_version, read_stamp
+
+    src = tmp_path / "src"
+    src.mkdir()
+    _write_src_file(str(src / "f0.parquet"), [("a", 1.0)], 1_000)
+    path, ckpt = str(tmp_path / "agg"), str(tmp_path / "ckpt")
+    _drain_agg_within(spark, src, path, ckpt)
+    v0, stamp0 = current_version(path), read_stamp(path)
+
+    monkeypatch.setattr(incremental, "apply_agg_delta", lambda agg, *_a: agg)
+    _write_src_file(str(src / "f1.parquet"), [("b", 2.0)], 2_000)
+    with pytest.raises(StreamingQueryException, match="batch's session"):
+        _drain_agg_within(spark, src, path, ckpt)
+    assert (current_version(path), read_stamp(path)) == (v0, stamp0)
